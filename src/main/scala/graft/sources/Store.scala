@@ -20,7 +20,10 @@ case class ObjectMeta(name: String, md5: Option[String], size: Long)
   * *spec'd* prefix-scoped listing semantics (the tested behavior at
   * /root/reference/download/common_test.go:34-43; the GCS impl's
   * whole-bucket listing at file/api.go:53 is a known bug we do not
-  * replicate).
+  * replicate). Scoped in cost as well as in result: [[HadoopFsStore]]
+  * lists only the directories under the prefix's directory part, not
+  * the whole root, so a dedup scope's listing does not grow with the
+  * rest of the store.
   *
   * Implementations must be [[Serializable]]: writes fan out from
   * executors (`foreachPartition`), so the handle ships with the task

@@ -2,8 +2,11 @@ package graft.sources
 
 import java.io.{ByteArrayOutputStream, FileNotFoundException, IOException}
 import java.net.URI
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs._
@@ -29,7 +32,21 @@ object GraftMemFileSystem {
     stores.getOrElseUpdate(auth, TrieMap.empty)
   def dirSet(auth: String): TrieMap[String, Unit] =
     dirs.getOrElseUpdate(auth, TrieMap.empty)
-  def clear(auth: String): Unit = { stores.remove(auth); dirs.remove(auth) }
+
+  /** Listing traffic per authority, so specs can pin what a listing
+    * touches: the keys `listStatus` was called on, in call order, and
+    * the number of `listLocatedStatus` calls (which `listFiles` makes). */
+  val listed = TrieMap.empty[String, ConcurrentLinkedQueue[String]]
+  val locatedCalls = TrieMap.empty[String, AtomicInteger]
+  def listedKeys(auth: String): Seq[String] =
+    listed.getOrElseUpdate(auth, new ConcurrentLinkedQueue).asScala.toSeq
+  def locatedCount(auth: String): Int =
+    locatedCalls.getOrElseUpdate(auth, new AtomicInteger).get
+  def resetTraffic(auth: String): Unit = { listed.remove(auth); locatedCalls.remove(auth) }
+
+  def clear(auth: String): Unit = {
+    stores.remove(auth); dirs.remove(auth); resetTraffic(auth)
+  }
 
   /** Seekable+PositionedReadable byte-array stream for FSDataInputStream. */
   class BytesIn(bytes: Array[Byte]) extends java.io.ByteArrayInputStream(bytes)
@@ -114,8 +131,14 @@ class GraftMemFileSystem extends FileSystem {
     dirSet(auth).remove(k).isDefined
   }
 
+  override def listLocatedStatus(f: Path): RemoteIterator[LocatedFileStatus] = {
+    locatedCalls.getOrElseUpdate(auth, new AtomicInteger).incrementAndGet()
+    super.listLocatedStatus(f)
+  }
+
   override def listStatus(f: Path): Array[FileStatus] = {
     val k = key(f)
+    listed.getOrElseUpdate(auth, new ConcurrentLinkedQueue).add(k)
     if (data(auth).contains(k)) return Array(getFileStatus(f))
     val prefix = if (k.isEmpty) "" else k + "/"
     val names = (data(auth).keys ++ dirSet(auth).keys)

@@ -26,6 +26,18 @@ class HadoopFsStoreSpec extends SparkSpec {
       "fs.AbstractFileSystem.graftmem.impl" -> classOf[GraftMemAbstractFs].getName))
   }
 
+  /** Write an object straight through the filesystem, with no sidecar. */
+  private def writeOutOfBand(authority: String, name: String, content: String): Unit = {
+    val path = new org.apache.hadoop.fs.Path(s"graftmem://$authority/base/$name")
+    val fs = path.getFileSystem({
+      val c = new org.apache.hadoop.conf.Configuration()
+      c.set("fs.graftmem.impl", classOf[GraftMemFileSystem].getName)
+      c
+    })
+    val out = fs.create(path, true)
+    try out.write(content.getBytes(UTF_8)) finally out.close()
+  }
+
   test("store contract on graftmem://: write/read/list/copy/delete with MD5 sidecars") {
     val store = mkStore("contract")
     store.write("rv/2024/01/a.gz", "alpha".getBytes(UTF_8))
@@ -54,18 +66,21 @@ class HadoopFsStoreSpec extends SparkSpec {
 
     // an object written OUT-OF-BAND (no sidecar) still lists with a
     // correct md5 — hashed once through the drain fallback
-    val fs = new org.apache.hadoop.fs.Path("graftmem://contract/base")
-      .getFileSystem({
-        val c = new org.apache.hadoop.conf.Configuration()
-        c.set("fs.graftmem.impl", classOf[GraftMemFileSystem].getName)
-        c
-      })
-    val out = fs.create(new org.apache.hadoop.fs.Path(
-      "graftmem://contract/base/rv/2024/03/external.gz"), true)
-    out.write("gamma".getBytes(UTF_8)); out.close()
+    writeOutOfBand("contract", "rv/2024/03/external.gz", "gamma")
     val ext = store.list("rv/2024/03/")
     assert(ext.map(_.name) == Seq("rv/2024/03/external.gz"))
     assert(ext.head.md5.contains(Store.md5Hex("gamma".getBytes(UTF_8))))
+  }
+
+  test("copy of a sidecar-less object over an existing one lists the new bytes' md5") {
+    val store = mkStore("stalecopy")
+    val current = "rv/current/b.gz"
+    store.write(current, "old-bytes".getBytes(UTF_8)) // has a sidecar
+    writeOutOfBand("stalecopy", "rv/2024/02/external.gz", "new-bytes")
+    store.copy("rv/2024/02/external.gz", current)
+    assert(new String(store.read(current), UTF_8) == "new-bytes")
+    assert(store.list(current).map(_.md5) ==
+      Seq(Some(Store.md5Hex("new-bytes".getBytes(UTF_8)))))
   }
 
   test("writeStream commits via rename: success yields (len, md5) + sidecar; failure leaves nothing") {

@@ -1,9 +1,14 @@
 package graft.sources
 
-import java.io.ByteArrayInputStream
+import java.io.{ByteArrayInputStream, OutputStream}
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.plans.Downloader
 
 /** Behavior matrix over every Store implementation — the same contract
   * the reference pins via its fake store
@@ -96,4 +101,69 @@ class StoreSpec extends AnyFunSuite {
     assert(got.map(_.name) == Seq("raw/outside.bin"))
     assert(got.head.md5.contains(Store.md5Hex("external-bytes".getBytes)))
   }
+
+  test("HadoopFsStore: a write that fails mid-stream leaves the previous value readable") {
+    val dir = Files.createTempDirectory("graft_hwrite")
+    val store = new HadoopFsStore("file://" + dir)
+    Downloader.saveWatermark(store, "ds", 5L)
+    // same root, but every output stream fails after its first 2 bytes
+    val failing = FailingLocalFileSystem.store(dir, FailingLocalFileSystem.FailAfterBytes -> "2")
+    intercept[java.io.IOException](Downloader.saveWatermark(failing, "ds", 123456789L))
+    assert(Downloader.loadWatermark(store, "ds") == 5L)
+    assert(store.list("").map(_.name) == Seq("_meta/watermark/ds"))
+    assert(!Files.exists(dir.resolve("_meta/watermark/.ds.part")))
+    Downloader.saveWatermark(store, "ds", 7L)
+    assert(Downloader.loadWatermark(store, "ds") == 7L)
+  }
+
+  test("HadoopFsStore: a sidecar write torn after the commit lists the new bytes' md5") {
+    val dir = Files.createTempDirectory("graft_hsidecar")
+    val store = new HadoopFsStore("file://" + dir)
+    store.write("rv/k.gz", "v1".getBytes)
+    // the object commits, then its new sidecar is left empty
+    val torn = FailingLocalFileSystem.store(dir,
+      FailingLocalFileSystem.FailAfterBytes -> "0", FailingLocalFileSystem.FailSuffix -> ".md5")
+    intercept[java.io.IOException](torn.write("rv/k.gz", "v2".getBytes))
+    assert(new String(store.read("rv/k.gz")) == "v2")
+    assert(store.list("rv/").map(_.md5) == Seq(Some(Store.md5Hex("v2".getBytes))))
+  }
+}
+
+/** The local filesystem, except that every output stream to a name
+  * ending in [[FailingLocalFileSystem.FailSuffix]] (default: any name)
+  * fails with an `IOException` once it has taken
+  * [[FailingLocalFileSystem.FailAfterBytes]] bytes: a crash in the
+  * middle of a write, as a store sees it. */
+class FailingLocalFileSystem extends LocalFileSystem {
+  override def create(f: HPath, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    val inner = super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+    if (!f.getName.endsWith(getConf.get(FailingLocalFileSystem.FailSuffix, ""))) return inner
+    val limit = getConf.getInt(FailingLocalFileSystem.FailAfterBytes, Int.MaxValue)
+    new FSDataOutputStream(new OutputStream {
+      private var taken = 0
+      override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        val n = math.min(len, limit - taken)
+        inner.write(b, off, n)
+        taken += n
+        if (n < len) throw new java.io.IOException(s"injected failure after $taken bytes: $f")
+      }
+      override def close(): Unit = inner.close()
+    }, statistics)
+  }
+}
+
+object FailingLocalFileSystem {
+  val FailAfterBytes = "graft.test.failAfterBytes"
+  val FailSuffix = "graft.test.failSuffix"
+
+  /** A store on `dir` whose filesystem is a fresh (uncached) instance of
+    * this class, configured by `failure`. */
+  def store(dir: java.nio.file.Path, failure: (String, String)*): HadoopFsStore =
+    new HadoopFsStore("file://" + dir, Map(
+      "fs.file.impl" -> classOf[FailingLocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true") ++ failure)
 }
