@@ -532,10 +532,11 @@ object ScaleProbe {
     }
 
     // --- 100k-entry manifest probe: pins the DOCUMENTED driver-side
-    // boundary of the archive pipeline (ArchivePipeline.run/ingest
-    // collect manifest METADATA — (seqnum, url) and (seqnum, name, md5,
-    // failed) tuples — while payload fetch/write fans out in executor
-    // tasks). 100k entries ≈ 3 decades of a daily feed; driver heap
+    // boundary of the archive pipeline (ArchivePipeline.run/ingest parse
+    // the manifest and decide dedup, promotion and the watermark on the
+    // driver over METADATA rows — (seqnum, url) and (seqnum, name, md5,
+    // failed) — while payload fetch/write fans out in the one executor
+    // job). 100k entries ≈ 3 decades of a daily feed; driver heap
     // delta shows the metadata rows are the only driver-side state.
     if (want("manifest_100k")) {
       val n = 100000

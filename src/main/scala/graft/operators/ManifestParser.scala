@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** A parsed manifest row: `seqnum` is the monotone sequence number used as
@@ -71,24 +71,16 @@ object ManifestParser {
       .as[ManifestEntry]
   }
 
-  /** Parse raw manifest text (driver-fetched, small) — the manifest file is
-    * tiny so it parallelizes from a local Dataset; blob fetches are what
-    * fan out across executors, not this.
-    */
-  def parseText(spark: SparkSession, body: String): Dataset[ManifestEntry] = {
-    import spark.implicits._
-    parse(spark.createDataset(body.split("\n", -1).toSeq).toDF("value"))
-  }
-
   /** Absolute URL for a manifest path: directory of the manifest URL +
     * relative path (`/root/reference/download/routeviews.go:109`). */
   def absoluteUrl(manifestUrl: String, path: String): String =
     manifestUrl.substring(0, manifestUrl.lastIndexOf('/') + 1) + path
 
-  /** Driver-side pure parse with the same drop semantics as [[parse]] —
-    * used where no session is in scope (the DSv2 streaming source plans
-    * offsets on the driver). `regexp_extract` finds the first regex
-    * match per line; comments/blanks don't match and drop. */
+  /** Driver-side pure parse with the same drop semantics as [[parse]],
+    * for a manifest body the driver already holds: the archive
+    * pipeline's manifest scan and the DSv2 streaming source's offset
+    * planning. Like `regexp_extract`, it takes the first regex match per
+    * line; comments and blanks don't match and drop. */
   def parseLines(body: String): Seq[ManifestEntry] = {
     val re = RowRegex.r
     body.split("\n", -1).toSeq.flatMap { line =>

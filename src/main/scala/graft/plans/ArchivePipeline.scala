@@ -3,12 +3,10 @@ package graft.plans
 import scala.util.matching.Regex
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 import graft.core.Metrics
-import graft.operators.{ManifestParser, Watermark}
-import graft.sources.{Naming, Store}
+import graft.operators.ManifestParser
+import graft.sources.{Naming, ObjectMeta, Store}
 
 /** Blob fetcher: executors call this inside `mapPartitions`, so the fetch
   * fans out one task per partition of the work-item set (the reference
@@ -61,17 +59,36 @@ case class IngestReport(
   failed: Seq[Long],
   currentPromoted: Seq[String])
 
-/** The reference's E2/E3 pipeline re-expressed as Spark dataflow
-  * (SURVEY §3): manifest scan → regex projection → watermark filter →
-  * distributed fetch → content-hash dedup (anti-join against the scope
-  * catalog) → partitioned archive write → current-pointer promotion →
-  * gated watermark advance.
+/** One work item as the fetch stage reports it: metadata only. A failed
+  * fetch carries `failed = true`, a `<failed:…>` name and no md5. */
+case class FetchedRow(seqnum: Long, name: String, md5: String, failed: Boolean)
+
+/** What a batch's metadata decides before any store side effect: the
+  * dedup verdict (`kept`/`duplicates`), the kept file to promote to the
+  * current pointer, the failed seqnums and the gated watermark advance.
+  */
+case class BatchVerdict(
+  kept: Seq[String],
+  duplicates: Seq[String],
+  promote: Option[String],
+  failed: Seq[Long],
+  newWatermark: Long)
+
+/** The reference's E2/E3 pipeline on Spark (SURVEY §3): manifest scan →
+  * regex projection → watermark filter → distributed fetch →
+  * content-hash dedup against the scope listing → partitioned archive
+  * write → current-pointer promotion → gated watermark advance.
   *
-  * Data-movement design: the manifest is tiny and parses driver-side;
-  * the *fetches* are the heavy fan-out and run as executor tasks; dedup
-  * is a broadcast anti-join of the new batch against the scope catalog
-  * (both metadata-only: name + md5); payload bytes never pass through a
-  * shuffle.
+  * Data-movement design: a batch costs ONE Spark job, the fetch fan-out
+  * — one task per partition of the work items, no shuffle, payload bytes
+  * flowing source → digest → store inside the task. Everything else is
+  * a metadata decision the driver takes over rows it already holds: the
+  * manifest body (parsed by [[ManifestParser.parseLines]]), the
+  * collected `(seqnum, name, md5, failed)` rows and the scope listings
+  * from [[Store.list]] (see [[verdict]]). Those rows are a few per day
+  * for a daily feed and about 100k for three decades of one (ScaleProbe
+  * `manifest_100k`), so sending them through Spark operators would only
+  * add job dispatch.
   */
 object ArchivePipeline {
 
@@ -94,7 +111,7 @@ object ArchivePipeline {
     graft.sources.Retry.withRetry(
         cfg.retryInitialMs.millis, cfg.retryMaxMs.millis, sleep) {
       val (_, md5) = fetcher.fetchTo(url, store, name)
-      val scope = cfg.dedupScopeRegex.findFirstMatchIn(name).map(_.group(1)).getOrElse("")
+      val scope = Naming.scopeOf(cfg.dedupScopeRegex, name)
       val isDup = store.list(scope).exists(o => o.name != name && o.md5.contains(md5))
       if (isDup) {
         store.delete(name) // delete failure throws PermanentError → aborts
@@ -115,18 +132,13 @@ object ArchivePipeline {
           watermark: Long,
           fetcher: Fetcher,
           metrics: Metrics): IngestReport = {
-    import spark.implicits._
-
     // 1. Manifest scan + projection + watermark filter (O3-O6, O8).
-    val entries = ManifestParser.parseText(spark, manifestBody)
-    val fresh = Watermark.filterNew(entries.toDF(), col("seqnum"), watermark)
-      .as[(Int, Long, String)].collect()
-      .map { case (seq, _, path) =>
-        (seq.toLong, ManifestParser.absoluteUrl(manifestUrl, path))
-      }
+    val fresh = ManifestParser.parseLines(manifestBody)
+      .filter(_.seqnum > watermark)
+      .map(e => (e.seqnum.toLong, ManifestParser.absoluteUrl(manifestUrl, e.path)))
     if (fresh.isEmpty)
       return IngestReport(watermark, Nil, Nil, Nil, Nil)
-    val rep = ingest(spark, fresh.toSeq, cfg, store, fetcher, metrics)
+    val rep = ingest(spark, fresh, cfg, store, fetcher, metrics)
     rep.copy(newWatermark = math.max(watermark, rep.newWatermark))
   }
 
@@ -144,101 +156,107 @@ object ArchivePipeline {
              store: Store,
              fetcher: Fetcher,
              metrics: Metrics): IngestReport = {
-    import spark.implicits._
     if (fresh.isEmpty) return IngestReport(0L, Nil, Nil, Nil, Nil)
 
-    // 2. Distributed fetch + store write (O9-O10). Each task fetches,
-    // derives the archive key, writes, and emits metadata only.
-    val errLabel = cfg.dataset
-    val failedAcc = metrics.downloadFailed(errLabel)
-    val items = spark.createDataset(fresh).toDF("seqnum", "url")
-    // ONE action drains the fetch stage: the side-effecting work
-    // (fetch + store write + failure counters) must not sit under a
-    // cached plan that later actions can silently recompute. The
-    // collected rows are metadata only (seqnum, name, md5, failed) and
-    // re-enter the relational dedup as a LocalRelation.
-    val fetchedRows = items.repartition(math.min(fresh.length, 32))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val seq = r.getLong(0); val url = r.getString(1)
-          val name = cfg.fixedFilename match {
-            case Some(fix) => Naming.fixedName(cfg.pathPrefix, cfg.filePrefix, fix)
-            case None => Naming.regexName(cfg.pathPrefix, cfg.filePrefix,
-              cfg.urlRegex.getOrElse(new Regex("(.*/)([^/]+)$")), url)
-              .getOrElse(cfg.pathPrefix + url.substring(url.lastIndexOf('/') + 1))
-          }
-          // Per-file retry with the reference's backoff taxonomy runs
-          // INSIDE the task (transient network errors don't fail the
-          // task; PermanentError aborts immediately) — Spark task
-          // retries remain the outer safety net.
-          graft.sources.Retry.withRetry(
-            scala.concurrent.duration.Duration(cfg.retryInitialMs, "ms"),
-            scala.concurrent.duration.Duration(cfg.retryMaxMs, "ms")) {
-            // streamed when the fetcher supports it: payload bytes flow
-            // source → digest → store inside the task, never buffered
-            val (_, md5) = fetcher.fetchTo(url, store, name)
-            (seq, name, md5, false)
-          } match {
-            case Right(row) => row
-            case Left(e) =>
-              failedAcc.add(1)
-              (seq, s"<failed:${e.getMessage}>", "", true)
-          }
+    // 2. Distributed fetch + store write (O9-O10), the batch's one Spark
+    // job. Each task fetches, derives the archive key, writes, and emits
+    // metadata only. Collecting drains the side-effecting work (fetch,
+    // store write, failure counter) exactly once.
+    val failedAcc = metrics.downloadFailed(cfg.dataset)
+    val fetched = spark.sparkContext
+      .parallelize(fresh, math.min(fresh.length, 32))
+      .mapPartitions(_.map { case (seq, url) =>
+        val name = archiveName(cfg, url)
+        // Per-file retry with the reference's backoff taxonomy runs
+        // INSIDE the task (transient network errors don't fail the
+        // task; PermanentError aborts immediately) — Spark task
+        // retries remain the outer safety net.
+        graft.sources.Retry.withRetry(
+          scala.concurrent.duration.Duration(cfg.retryInitialMs, "ms"),
+          scala.concurrent.duration.Duration(cfg.retryMaxMs, "ms")) {
+          // streamed when the fetcher supports it: payload bytes flow
+          // source → digest → store inside the task, never buffered
+          val (_, md5) = fetcher.fetchTo(url, store, name)
+          FetchedRow(seq, name, md5, failed = false)
+        } match {
+          case Right(row) => row
+          case Left(e) =>
+            failedAcc.add(1)
+            FetchedRow(seq, s"<failed:${e.getMessage}>", "", failed = true)
         }
-      }.collect()
-    val fetched = spark.createDataset(fetchedRows.toSeq)
-      .toDF("seqnum", "name", "md5", "failed")
+      }).collect().toSeq
 
-    // 3. Dedup verdict (O11-O13): a file is a duplicate iff another name
-    // in its scope shares its md5. The reference checks sequentially at
-    // upload time (first of an identical pair wins, common.go:162-190);
-    // batch-equivalent: keep-first per (scope, md5) within the batch,
-    // then broadcast anti-join against the PRE-existing scope catalog
-    // (metadata only — payload bytes never shuffle).
-    val ok = fetched.filter(!col("failed"))
-      .withColumn("scope", regexp_extract(col("name"), cfg.dedupScopeRegex.regex, 1))
-    val batchNames = ok.select("name").as[String].collect().toSet
-    val scopes = ok.select("scope").distinct().as[String].collect()
-    val preExisting = scopes.flatMap(store.list).distinct
-      .filterNot(o => batchNames.contains(o.name))
-    // Scope equality is part of the duplicate predicate: the reference's
-    // IsFileNew (common.go:162-190) only ever compares within the scope
-    // prefix it listed, so bytes shared with an object in a DIFFERENT
-    // scope (e.g. an unchanged file across a month boundary under
-    // month-scoped dedup) must be kept, not deleted.
-    val catDf = broadcast(spark.createDataset(preExisting.toSeq).toDF()
-      .select(col("name").as("cat_name"), col("md5").as("cat_md5"))
-      .withColumn("cat_scope",
-        regexp_extract(col("cat_name"), cfg.dedupScopeRegex.regex, 1)))
-    val w = Window.partitionBy(col("scope"), col("md5")).orderBy(col("seqnum"))
-    val keptRows = ok
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-      .join(catDf,
-        col("md5") === col("cat_md5") && col("name") =!= col("cat_name") &&
-          col("scope") === col("cat_scope"),
-        "left_anti")
-      .select("seqnum", "name").as[(Long, String)].collect()
-
-    val kept = keptRows.map(_._2).toSeq
-    val keptSet = kept.toSet // Set membership: filterNot over a Seq is O(k²)
-    val dups = batchNames.toSeq.sorted.filterNot(keptSet.contains)
+    // 3. Dedup verdict (O11-O13) over the scope listings, driver-side.
+    val listing = scopes(fetched, cfg.dedupScopeRegex).flatMap(store.list)
+    val v = verdict(fetched, listing, cfg.dedupScopeRegex)
 
     // 4. Duplicate deletion (O14) — reference deletes the just-uploaded
     // duplicate; delete failure is permanent (common.go:123-130).
-    dups.foreach(store.delete)
+    v.duplicates.foreach(store.delete)
 
     // 5. Current-pointer promotion (O15): latest kept file by archive key
     // order is copied to the canonical current name.
-    val promoted = kept.sorted.lastOption.map { newest =>
+    val promoted = v.promote.map { newest =>
       store.copy(newest, cfg.currentName)
       cfg.currentName
     }.toSeq
 
-    // 6. Gated watermark advance (O7).
-    val adv = Watermark.gatedAdvance(fetched, Nil, col("seqnum"), col("failed"))
-      .select("watermark").as[Long].head()
-    val failedSeqs = fetchedRows.filter(_._4).map(_._1)
+    IngestReport(v.newWatermark, v.kept, v.duplicates, v.failed, promoted)
+  }
 
-    IngestReport(adv, kept, dups, failedSeqs.toSeq, promoted)
+  /** Archive key of a manifest work item (O10): the fixed name, or the
+    * URL regex's groups around the file prefix, or the URL's basename. */
+  private def archiveName(cfg: SourceConfig, url: String): String =
+    cfg.fixedFilename match {
+      case Some(fix) => Naming.fixedName(cfg.pathPrefix, cfg.filePrefix, fix)
+      case None => Naming.regexName(cfg.pathPrefix, cfg.filePrefix,
+        cfg.urlRegex.getOrElse(new Regex("(.*/)([^/]+)$")), url)
+        .getOrElse(cfg.pathPrefix + url.substring(url.lastIndexOf('/') + 1))
+    }
+
+  /** The distinct dedup scopes of a batch's fetched files, in batch
+    * order: the prefixes whose listings [[verdict]] compares against. */
+  def scopes(fetched: Seq[FetchedRow], scopeRegex: Regex): Seq[String] =
+    fetched.filterNot(_.failed).map(r => Naming.scopeOf(scopeRegex, r.name)).distinct
+
+  /** The batch's decisions, a pure function of the fetched rows and the
+    * listings of their [[scopes]].
+    *
+    * A fetched file is a duplicate iff another file in its scope holds
+    * the same md5. The reference checks sequentially at upload time
+    * (first of an identical pair wins, common.go:162-190); the batch
+    * equivalent keeps the first row per (scope, md5) by seqnum, then
+    * drops any row whose (scope, md5) an object already in the listing
+    * holds. Scope equality is part of the predicate: the reference's
+    * IsFileNew only ever compares within the scope prefix it listed, so
+    * bytes shared with an object in a DIFFERENT scope (an unchanged file
+    * across a month boundary under month-scoped dedup) are kept. The
+    * listing includes the batch's own just-written objects; they do not
+    * count as pre-existing, and neither do listed objects without an md5.
+    *
+    * The watermark advance is gated (O7): the max seqnum when nothing
+    * failed, else the first failed seqnum − 1.
+    */
+  def verdict(fetched: Seq[FetchedRow], listing: Seq[ObjectMeta],
+              scopeRegex: Regex): BatchVerdict = {
+    val ok = fetched.filterNot(_.failed)
+    val batchNames = ok.map(_.name).toSet
+    val held = listing.iterator
+      .filterNot(o => batchNames.contains(o.name))
+      .flatMap(o => o.md5.map(md5 => (Naming.scopeOf(scopeRegex, o.name), md5)))
+      .toSet
+    val seen = scala.collection.mutable.HashSet.empty[(String, String)]
+    val kept = ok.sortBy(_.seqnum).filter { r =>
+      val key = (Naming.scopeOf(scopeRegex, r.name), r.md5)
+      seen.add(key) && !held.contains(key)
+    }.map(_.name)
+    val failed = fetched.filter(_.failed).map(_.seqnum)
+    val maxSeq = fetched.map(_.seqnum).max
+    BatchVerdict(
+      kept = kept,
+      duplicates = (batchNames -- kept).toSeq.sorted,
+      promote = kept.maxOption,
+      failed = failed,
+      newWatermark = failed.minOption.fold(maxSeq)(f => math.min(maxSeq, f - 1)))
   }
 }

@@ -1,12 +1,14 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, FileNotFoundException, OutputStream}
+import java.io.{ByteArrayInputStream, FileNotFoundException, IOException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, Path => JPath}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 
 import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, LocalFileSystem, Path => HPath}
 
 /** Durable [[Store]] over any Hadoop `FileSystem` URI — `file://`,
   * `hdfs://`, `s3a://`, whatever the classpath provides — the cluster
@@ -33,6 +35,21 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path => HPath}
   * mid-stream failure never leaves a truncated object. [[write]] goes
   * through the same commit, so a crash mid-save leaves the previously
   * committed value (a watermark, say) readable.
+  *
+  * Local fast path: on the local filesystem (a `file:` root with no
+  * `fs.file.impl` override) [[writeStream]], [[copy]] and [[delete]] go
+  * through `java.nio` with the same steps. Hadoop's local filesystem
+  * without its native library forks a `chmod` for every file it creates
+  * (the `.part` temp, the sidecar, and a `.crc` checksum file beside
+  * each) and renames through a `FileContext` and several status calls,
+  * so one 5-byte write through it takes 44-57 ms, most of it in child
+  * processes, whose cost swings with the load on the host. Written
+  * directly, a write creates no `.crc` and deletes the one a Hadoop
+  * write may have left for the same name before the new bytes land, so
+  * Hadoop's checksummed reads never check new bytes against an old
+  * checksum.
+  * Listing and reading stay on Hadoop, which forks for neither. An
+  * `fs.file.impl` override keeps every call on the configured class.
   *
   * Listing cost: [[list]] walks with `listStatus`, starting at the
   * prefix's directory part (the prefix up to its last `/`) and entering
@@ -61,6 +78,11 @@ class HadoopFsStore(rootUri: String,
   }
   @transient private lazy val root: HPath = new HPath(rootUri)
   @transient private lazy val fs: FileSystem = root.getFileSystem(conf)
+  /** The root as a local path when the local fast path applies. */
+  @transient private lazy val localRoot: Option[JPath] =
+    if (fs.isInstanceOf[LocalFileSystem] && conf.get("fs.file.impl") == null)
+      Some(Paths.get(fs.makeQualified(root).toUri))
+    else None
 
   private def p(name: String): HPath = new HPath(root, name)
   private def sidecarName(name: String): String = "." + name + ".md5"
@@ -127,7 +149,12 @@ class HadoopFsStore(rootUri: String,
   def write(name: String, content: Array[Byte]): Unit =
     writeStream(name, new ByteArrayInputStream(content))
 
-  override def writeStream(name: String, in: java.io.InputStream): (Long, String) = {
+  override def writeStream(name: String, in: InputStream): (Long, String) = localRoot match {
+    case Some(r) => HadoopFsStore.LocalOps.writeStream(r.resolve(name), in)
+    case None => hadoopWriteStream(name, in)
+  }
+
+  private def hadoopWriteStream(name: String, in: InputStream): (Long, String) = {
     val target = p(name)
     val tmp = new HPath(target.getParent, "." + target.getName + ".part")
     val out = fs.create(tmp, true) // creates parent dirs
@@ -153,7 +180,12 @@ class HadoopFsStore(rootUri: String,
     * distcp / S3 multipart-copy behind the same trait method when the
     * current-pointer objects get large. The destination's sidecar is
     * the source's, or none when the source has none. */
-  def copy(src: String, dst: String): Unit = {
+  def copy(src: String, dst: String): Unit = localRoot match {
+    case Some(r) => HadoopFsStore.LocalOps.copy(r.resolve(src), r.resolve(dst))
+    case None => hadoopCopy(src, dst)
+  }
+
+  private def hadoopCopy(src: String, dst: String): Unit = {
     val dstSidecar = sidecar(p(dst))
     fs.delete(dstSidecar, false)
     if (!FileUtil.copy(fs, p(src), fs, p(dst), false, true, conf))
@@ -165,7 +197,14 @@ class HadoopFsStore(rootUri: String,
   /** Delete failure is the reference's permanent error (common.go:128).
     * The sidecar goes first: an orphaned one could later describe an
     * externally-written object of the same name. */
-  def delete(name: String): Unit = {
+  def delete(name: String): Unit = localRoot match {
+    case Some(r) =>
+      try HadoopFsStore.LocalOps.delete(r.resolve(name))
+      catch { case e: IOException => throw PermanentError(s"delete failed: $name", e) }
+    case None => hadoopDelete(name)
+  }
+
+  private def hadoopDelete(name: String): Unit = {
     fs.delete(sidecar(p(name)), false)
     if (!fs.delete(p(name), false) && fs.exists(p(name)))
       throw PermanentError(s"delete failed: $name")
@@ -174,4 +213,50 @@ class HadoopFsStore(rootUri: String,
 
 object HadoopFsStore {
   private val Md5Hex = "[0-9a-f]{32}".r
+
+  /** The local fast path's steps, over the same file layout as the
+    * Hadoop path: `.<name>.md5` sidecars, `.<name>.part` temps, and the
+    * `.<name>.crc` checksums Hadoop keeps, which these steps remove and
+    * never write. */
+  private object LocalOps {
+    private def hidden(p: JPath, suffix: String): JPath =
+      p.resolveSibling("." + p.getFileName + suffix)
+    private def sidecar(p: JPath): JPath = hidden(p, ".md5")
+
+    /** Delete a file and its `.crc`; true when the file existed. */
+    private def drop(p: JPath): Boolean = {
+      Files.deleteIfExists(hidden(p, ".crc"))
+      Files.deleteIfExists(p)
+    }
+
+    def writeStream(target: JPath, in: InputStream): (Long, String) = {
+      Files.createDirectories(target.getParent)
+      val tmp = hidden(target, ".part")
+      try {
+        val out = Files.newOutputStream(tmp)
+        val res = try Store.drain(in, out) finally out.close()
+        drop(sidecar(target))
+        Files.deleteIfExists(hidden(target, ".crc"))
+        // atomic on one filesystem: a crash leaves the old or the new bytes
+        Files.move(tmp, target, REPLACE_EXISTING, ATOMIC_MOVE)
+        Files.write(sidecar(target), res._2.getBytes(UTF_8))
+        res
+      } catch {
+        case e: Throwable => Files.deleteIfExists(tmp); throw e
+      }
+    }
+
+    def copy(src: JPath, dst: JPath): Unit = {
+      drop(sidecar(dst))
+      Files.deleteIfExists(hidden(dst, ".crc"))
+      Files.createDirectories(dst.getParent)
+      Files.copy(src, dst, REPLACE_EXISTING)
+      if (Files.exists(sidecar(src))) Files.copy(sidecar(src), sidecar(dst), REPLACE_EXISTING)
+    }
+
+    def delete(target: JPath): Unit = {
+      drop(sidecar(target))
+      drop(target)
+    }
+  }
 }

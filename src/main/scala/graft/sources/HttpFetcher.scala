@@ -29,18 +29,15 @@ import graft.plans.Fetcher
   *    store-side copy/delete failures).
   *
   * Serializable by construction (fetches run inside executor tasks):
-  * the JDK [[HttpClient]] is not serializable, so it is rebuilt lazily
-  * per deserialized instance.
+  * the JDK [[HttpClient]] is not serializable, so a deserialized
+  * instance looks up the JVM's shared client for its timeout lazily.
   */
 case class HttpFetcher(
     basicAuthUser: Option[String] = None,
     basicAuthPass: Option[String] = None,
     attemptTimeout: Duration = HttpFetcher.DefaultAttemptTimeout) extends Fetcher {
 
-  @transient private lazy val client: HttpClient = HttpClient.newBuilder()
-    .followRedirects(HttpClient.Redirect.NORMAL)
-    .connectTimeout(attemptTimeout)
-    .build()
+  @transient private lazy val client: HttpClient = HttpFetcher.clientFor(attemptTimeout)
 
   private def request(url: String): HttpRequest = {
     val b = HttpRequest.newBuilder(URI.create(url))
@@ -106,6 +103,21 @@ case class HttpFetcher(
 
 object HttpFetcher {
   val DefaultAttemptTimeout: Duration = Duration.ofMinutes(30)
+
+  /** One client per connect timeout for the whole JVM. A client owns a
+    * selector thread, a worker pool and a keep-alive connection pool,
+    * and a fetcher is deserialized afresh into every fetch task, so a
+    * client per instance would open a connection per task and leave its
+    * threads and socket behind until a GC collected it (back-to-back
+    * daily iterations would grow the JVM by about 20 threads a second).
+    * Shared, tasks reuse pooled connections and start no threads. */
+  private val clients = new java.util.concurrent.ConcurrentHashMap[Duration, HttpClient]()
+
+  private def clientFor(connectTimeout: Duration): HttpClient =
+    clients.computeIfAbsent(connectTimeout, t => HttpClient.newBuilder()
+      .followRedirects(HttpClient.Redirect.NORMAL)
+      .connectTimeout(t)
+      .build())
 
   /** One daemon thread arms per-attempt watchdogs for the whole JVM —
     * scheduled tasks are cancelled on normal completion, so the queue

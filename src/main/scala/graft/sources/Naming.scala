@@ -33,4 +33,11 @@ object Naming {
                 url: String): Option[String] =
     urlRegex.findFirstMatchIn(url).map(m =>
       pathPrefix + m.group(1) + filePrefix + m.group(2))
+
+  /** Dedup scope of an archive key: group 1 of the first match of
+    * `scopeRegex`, with Spark `regexp_extract` semantics — `""` when
+    * nothing matches or group 1 does not take part in the match (an
+    * optional group such as `(x/)?.*`), never `null`. */
+  def scopeOf(scopeRegex: Regex, name: String): String =
+    scopeRegex.findFirstMatchIn(name).flatMap(m => Option(m.group(1))).getOrElse("")
 }

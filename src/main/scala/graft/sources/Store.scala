@@ -5,8 +5,6 @@ import java.security.MessageDigest
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Object metadata row: the engine's core catalog relation
   * `(name STRING, md5 BINARY-as-hex)` — see /root/reference/file/api.go:52-65
   * (`NamesToMD5`). MD5 carried as lowercase hex so it joins directly
@@ -26,9 +24,8 @@ case class ObjectMeta(name: String, md5: Option[String], size: Long)
   * rest of the store.
   *
   * Implementations must be [[Serializable]]: writes fan out from
-  * executors (`foreachPartition`), so the handle ships with the task
-  * closure. Catalog reads surface as a DataFrame so dedup is a relational
-  * anti-join, not a driver-side map probe.
+  * executors (the fetch stage's `mapPartitions`), so the handle ships
+  * with the task closure.
   */
 trait Store extends Serializable {
   def list(prefix: String): Seq[ObjectMeta]
@@ -49,12 +46,6 @@ trait Store extends Serializable {
     val res = Store.drain(in, out)
     write(name, out.toByteArray)
     res
-  }
-
-  /** The catalog relation for a scope, as a DataFrame. */
-  def catalog(spark: SparkSession, prefix: String): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(list(prefix)).toDF()
   }
 }
 

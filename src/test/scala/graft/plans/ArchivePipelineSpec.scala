@@ -235,6 +235,51 @@ class ArchivePipelineSpec extends SparkSpec {
     assert(store.list("Maxmind/2017/09/1").map(_.name) == Seq(expectName))
   }
 
+  test("fixed-name source: a scope regex whose group 1 does not take part scopes to the whole store") {
+    // (x/)?.* matches every key without group 1: the scope is "" (the
+    // regexp_extract semantics the manifest path uses), not a null that
+    // store.list would throw on inside the retry loop
+    val store = new InMemoryStore
+    val mm = SourceConfig(
+      dataset = "Maxmind",
+      pathPrefix = "Maxmind/",
+      currentName = "Maxmind/current/GeoLite2-City.tar.gz",
+      fixedFilename = Some("GeoLite2-City.tar.gz"),
+      dedupScopeRegex = new Regex("(x/)?.*"),
+      retryInitialMs = 1, retryMaxMs = 0)
+    store.write("Other/2017/01/01/old.tar.gz", "geo-bytes".getBytes("UTF-8"))
+    val fetcher = new ArchivePipelineSpec.MapFetcher(Map("city.tgz" -> "geo-bytes"))
+    val now = java.time.Instant.parse("2017-09-15T10:20:30Z")
+    val name = "Maxmind/2017/09/15/20170915T102030Z-GeoLite2-City.tar.gz"
+    assert(ArchivePipeline.runFixedSource(mm, "http://x/city.tgz", store, fetcher, now) ==
+      Right(IngestReport(0L, Nil, Seq(name), Nil, Nil)))
+
+    // the manifest path derives the same scope
+    val r = ArchivePipeline.run(spark, manifest(3363 -> "2017/06/a.pfx2as.gz"),
+      manifestUrl, cfg.copy(dedupScopeRegex = new Regex("(x/)?.*")), store, 0L,
+      new MapFetcher(Map("a.pfx2as.gz" -> "geo-bytes")), new Metrics(spark))
+    assert(r.kept.isEmpty && r.duplicates == Seq("RouteViewIPv4/2017/06/a.pfx2as.gz"))
+  }
+
+  test("a run submits one Spark job: one stage, no shuffle; no new rows submit none") {
+    val store = new InMemoryStore
+    val rows = (1 to 5).map(i => (3362 + i) -> s"2017/06/f$i.pfx2as.gz")
+    val fetcher = new MapFetcher(rows.map { case (_, p) =>
+      p.substring(p.lastIndexOf('/') + 1) -> s"bytes-of-$p" }.toMap)
+    val body = manifest(rows: _*)
+    val (r, counts) = graft.SparkJobCount.during(spark) {
+      ArchivePipeline.run(spark, body, manifestUrl, cfg, store, 0L, fetcher, new Metrics(spark))
+    }
+    assert(r.kept.size == 5 && r.newWatermark == 3367L)
+    assert(counts == graft.SparkJobCount(jobs = 1, stages = 1, shuffleBytes = 0L))
+
+    val (again, none) = graft.SparkJobCount.during(spark) {
+      ArchivePipeline.run(spark, body, manifestUrl, cfg, store, 3367L, fetcher, new Metrics(spark))
+    }
+    assert(again == IngestReport(3367L, Nil, Nil, Nil, Nil))
+    assert(none.jobs == 0)
+  }
+
   test("scheduler: jitter bounds and all-success gating") {
     import scala.concurrent.duration._
     val rng = new scala.util.Random(0)

@@ -224,6 +224,24 @@ class DownloaderSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(sink.latest.get("downloader_last_success_time_seconds") >= 7001L)
   }
 
+  test("runOnce with two manifest feeds and one fixed feed submits two Spark jobs") {
+    // one fetch job per manifest feed with new rows; the fixed feed and
+    // every dedup, promotion and watermark decision stay on the driver
+    val store = new InMemoryStore
+    manifestRows = Seq(3363 -> "2017/06/a.pfx2as.gz", 3364 -> "2017/06/b.pfx2as.gz")
+    val url = s"$base/rv/pfx2as-creation.log"
+    val (mf, ff) = Downloader.parseFeeds(
+      s"manifest|FeedA|$url;manifest|FeedB|$url;" +
+        s"fixed|Maxmind|GeoLite2-City.tar.gz|$base/rv/GeoLite2-City.tar.gz")
+    val (results, counts) = graft.SparkJobCount.during(spark) {
+      Downloader.runOnce(spark, store, HttpFetcher(), new Metrics(spark), mf, ff)
+    }
+    assert(results == Seq(true, true, true))
+    assert(Downloader.loadWatermark(store, "FeedA") == 3364L)
+    assert(Downloader.loadWatermark(store, "FeedB") == 3364L)
+    assert(counts.jobs == 2)
+  }
+
   test("loop publishes per iteration and gates the gauge on all-success") {
     val store = new InMemoryStore
     val metrics = new Metrics(spark)

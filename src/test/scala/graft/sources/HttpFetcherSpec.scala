@@ -24,6 +24,8 @@ import scala.util.matching.Regex
 class HttpFetcherSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private var server: HttpServer = _
+  /** client ports the `/conn` handler has seen: one per connection */
+  private val connPorts = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
   private def base: String = s"http://127.0.0.1:${server.getAddress.getPort}"
 
   override protected def beforeAll(): Unit = {
@@ -35,6 +37,10 @@ class HttpFetcherSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       ex.close()
     }
     server.createContext("/ok", ex => reply(ex, 200, "payload-bytes".getBytes(UTF_8)))
+    server.createContext("/conn", ex => {
+      connPorts.add(ex.getRemoteAddress.getPort)
+      reply(ex, 200, "c".getBytes(UTF_8))
+    })
     server.createContext("/missing", ex => reply(ex, 404, Array.emptyByteArray))
     server.createContext("/auth", ex => {
       val h = Option(ex.getRequestHeaders.getFirst("Authorization"))
@@ -115,6 +121,21 @@ class HttpFetcherSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     intercept[Exception](f.fetch(s"$base/stall"))
     val elapsedMs = (System.nanoTime() - t0) / 1000000
     assert(elapsedMs < 5000, s"stalled read held the thread ${elapsedMs}ms")
+  }
+
+  test("fetchers deserialized per task share one client and its pooled connection") {
+    // a timeout no other test uses, so the client and its pool start empty
+    val f = HttpFetcher(attemptTimeout = Duration.ofSeconds(61))
+    def taskCopy(): HttpFetcher = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(buf)
+      out.writeObject(f); out.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(buf.toByteArray))
+        .readObject().asInstanceOf[HttpFetcher]
+    }
+    connPorts.clear()
+    (1 to 5).foreach(_ => assert(new String(taskCopy().fetch(s"$base/conn"), UTF_8) == "c"))
+    assert(connPorts.size == 1, s"5 sequential fetches opened ${connPorts.size} connections")
   }
 
   test("fetchTo streams into the store with on-the-fly md5") {

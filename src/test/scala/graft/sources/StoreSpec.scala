@@ -3,6 +3,8 @@ package graft.sources
 import java.io.{ByteArrayInputStream, OutputStream}
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
@@ -24,7 +26,9 @@ class StoreSpec extends AnyFunSuite {
       () => new LocalFsStore(Files.createTempDirectory("graft_store").toString)),
     ("HadoopFsStore(file://)",
       () => new HadoopFsStore(
-        "file://" + Files.createTempDirectory("graft_hstore").toString)))
+        "file://" + Files.createTempDirectory("graft_hstore").toString)),
+    ("HadoopFsStore(file://, through Hadoop)",
+      () => HadoopLocal.store(Files.createTempDirectory("graft_hlstore"))))
 
   for ((label, mk) <- stores) {
     test(s"$label: streamed write computes size+md5 on the fly") {
@@ -116,6 +120,30 @@ class StoreSpec extends AnyFunSuite {
     assert(Downloader.loadWatermark(store, "ds") == 7L)
   }
 
+  test("HadoopFsStore: local writes leave no .crc and replace the .crc a Hadoop write left") {
+    val dir = Files.createTempDirectory("graft_hcrc")
+    val hadoop = HadoopLocal.store(dir) // checksummed: writes and verifies .crc files
+    val store = new HadoopFsStore("file://" + dir)
+    def crcs: Seq[String] = {
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".crc")).toSeq
+      finally walk.close()
+    }
+    Seq("rv/a.gz", "rv/current/a.gz", "rv/b.gz").foreach(n => hadoop.write(n, "old".getBytes))
+    assert(crcs.nonEmpty)
+    store.write("rv/a.gz", "new-bytes".getBytes)
+    store.copy("rv/a.gz", "rv/current/a.gz")
+    store.delete("rv/b.gz")
+    store.write("rv/c.gz", "c".getBytes)
+    assert(crcs.isEmpty)
+    // the checksummed reader takes the new bytes: no stale checksum left to fail
+    assert(new String(hadoop.read("rv/a.gz")) == "new-bytes")
+    assert(new String(hadoop.read("rv/current/a.gz")) == "new-bytes")
+    val md5 = Some(Store.md5Hex("new-bytes".getBytes))
+    assert(hadoop.list("rv/").map(o => o.name -> o.md5) == Seq(
+      "rv/a.gz" -> md5, "rv/c.gz" -> Some(Store.md5Hex("c".getBytes)), "rv/current/a.gz" -> md5))
+  }
+
   test("HadoopFsStore: a sidecar write torn after the commit lists the new bytes' md5") {
     val dir = Files.createTempDirectory("graft_hsidecar")
     val store = new HadoopFsStore("file://" + dir)
@@ -154,6 +182,14 @@ class FailingLocalFileSystem extends LocalFileSystem {
       override def close(): Unit = inner.close()
     }, statistics)
   }
+}
+
+/** Stores on the local filesystem that keep every call on Hadoop's
+  * checksummed `LocalFileSystem` (an `fs.file.impl` override turns the
+  * local fast path off). */
+object HadoopLocal {
+  def store(dir: java.nio.file.Path): HadoopFsStore =
+    new HadoopFsStore("file://" + dir, Map("fs.file.impl" -> classOf[LocalFileSystem].getName))
 }
 
 object FailingLocalFileSystem {
