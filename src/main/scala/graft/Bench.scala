@@ -29,11 +29,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // experiment hook: SPARK_GRAFT_EXTRA="k=v;k2=v2"
-    val extra = sys.env.get("SPARK_GRAFT_EXTRA").toSeq
-      .flatMap(_.split(';').filter(_.contains('=')))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
-    val spark = graft.core.Sessions.local(cpus.toInt, extra)
+    val spark = graft.core.Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // optional arg: comma-separated name prefixes for fast iteration
     // (same contract as Verify); the driver's full run passes no args.

@@ -7,15 +7,10 @@ import org.apache.spark.sql.SparkSession
   * [[graft.plans.GraftExtensions]] installed — so every entry point
   * (Verify, Bench, tests, user sessions) runs with the engine's
   * optimizer rule, planner strategy, and SQL functions active.
-  *
-  * Setting `SPARK_GRAFT_NO_EXTENSIONS` skips the extension install —
-  * an A/B lever for benchmarking the extensions' own overhead. Do NOT
-  * export it in normal runs: without extensions, `graft_dot` SQL and
-  * the latest-per-group rewrite are silently absent.
   */
 object Sessions {
-  def local(cores: Int, extra: Map[String, String] = Map.empty): SparkSession = {
-    val b = SparkSession.builder()
+  def local(cores: Int): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
@@ -27,9 +22,6 @@ object Sessions {
       // the identical micros value, so this is a pure type fix.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
-    if (!sys.env.contains("SPARK_GRAFT_NO_EXTENSIONS"))
-      b.withExtensions(new graft.plans.GraftExtensions)
-    extra.foreach { case (k, v) => b.config(k, v) }
-    b.getOrCreate()
-  }
+      .withExtensions(new graft.plans.GraftExtensions)
+      .getOrCreate()
 }

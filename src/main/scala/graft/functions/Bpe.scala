@@ -116,7 +116,8 @@ object Bpe {
     * sequenced loop pays ~50-85 ms of scheduling per merge (42 min of
     * pure latency at a 30 k vocabulary) no matter how large the
     * cluster; here a merge is microseconds after the one-time collect
-    * (measured ≈ 500× at k = 300 on the sf0.1 corpus, ScaleProbe).
+    * (k = 300 on the sf0.1 corpus: 0.23 s in total against ≈ 184 ms
+    * per merge sequentially, SURVEY q72).
     *
     * The collect is MODEL-sized, not corpus-sized (the q30/q74 policy):
     * |distinct words| is bounded by vocabulary growth, not corpus rows
@@ -239,91 +240,5 @@ object Bpe {
       }
     }
     out.result()
-  }
-
-  /** Train `k` merges taking up to `batch` pairs per aggregation round
-    * — the driver-loop remedy for production vocabularies, EXACT by
-    * construction: the merge list is always identical to [[train]]'s.
-    * Sequential training is one Spark job per merge, so a 30k-merge
-    * vocabulary pays 30k job latencies (~50 ms each ≈ 25 min of pure
-    * scheduling) regardless of cluster size; this form pays one job
-    * per ROUND, accepting as many top picks as provably safe.
-    *
-    * Per round the pair counts aggregate ONCE, sorted (freq desc, pair
-    * asc) — sequential training's pick order. The sorted prefix is
-    * accepted while each pick is provably the pick sequential training
-    * would make next, stopping the round at the first pick where that
-    * proof fails:
-    *
-    *  - OVERLAP stop: a candidate sharing a symbol with an accepted
-    *    pair has its post-merge count reduced by an unknown amount —
-    *    a later smaller pick can't be shown to outrank it. (Disjoint
-    *    pairs are untouched: a merge only perturbs counts of pairs
-    *    overlapping it, so an accepted disjoint pick's recorded
-    *    frequency is exactly the sequential count.)
-    *  - NEW-PAIR stop: merging (a, b) creates pairs (x, ab) / (ab, y)
-    *    whose counts are bounded by min(f(a,b), count(x,a) / count(b,y))
-    *    — adjacency counts read from the same collected round (pairs
-    *    below the collection cut are bounded by the cut frequency). A
-    *    pick is accepted only while its frequency STRICTLY exceeds the
-    *    round's accumulated new-pair bound, so no created pair can tie
-    *    or outrank it.
-    *
-    * Worst case (dense overlaps/plateaus) degenerates to one merge per
-    * round = [[train]]; natural-language frequency tails accept most of
-    * the batch. Spec-pinned merge-list-identical to [[train]] on the
-    * fixture corpus. */
-  def trainBatched(docs: DataFrame, k: Int, batch: Int,
-                   textCol: String = "text"): Seq[Merge] = {
-    require(batch >= 1, "batch must be >= 1")
-    var words = wordFreq(docs, textCol).localCheckpoint()
-    val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var exhausted = false
-    while (out.size < k && !exhausted) {
-      val want = math.min(batch, k - out.size)
-      // 4× headroom: the adjacency bounds need visibility below the
-      // acceptance horizon, and stops must not starve a round
-      val limit = want * 4
-      val top = words
-        .select(explode(pairKeys(col("ws"))).as("p"), col("n"))
-        .groupBy(col("p")).agg(sum(col("n")).as("f"))
-        .orderBy(col("f").desc, col("p"))
-        .limit(limit).collect()
-        .map { r => val Array(a, b) = r.getString(0).split('!')
-          (a, b, r.getLong(1)) }
-      if (top.isEmpty) exhausted = true
-      else {
-        // pairs below the cut exist only when the limit was reached
-        val fCut = if (top.length == limit) top.last._3 else 0L
-        val used = scala.collection.mutable.HashSet.empty[String]
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[Merge]
-        var newPairBound = -1L
-        var stopped = false
-        val it = top.iterator
-        while (!stopped && accepted.size < want && it.hasNext) {
-          val (a, b, f) = it.next()
-          if (used(a) || used(b)) stopped = true        // OVERLAP stop
-          else if (accepted.nonEmpty && f <= newPairBound) stopped = true // NEW-PAIR stop
-          else {
-            accepted += Merge(a, b, f)
-            used += a; used += b
-            // (x,ab) ≤ count(x,a) [second = a]; (ab,y) ≤ count(b,y)
-            // [first = b]. A same-symbol pair (a,a) matches its own
-            // filter and must: runs of aaa make (aa,a) pairs bounded by
-            // f itself, and nothing smaller.
-            val adjMax = top.iterator
-              .filter(q => q._2 == a || q._1 == b)
-              .map(_._3).maxOption.getOrElse(0L)
-            newPairBound = math.max(newPairBound,
-              math.min(f, math.max(adjMax, fCut)))
-          }
-        }
-        out ++= accepted
-        words = words
-          .select(applyMerges(col("ws"), accepted.toSeq).as("ws"), col("n"))
-          .localCheckpoint()
-      }
-    }
-    out.take(k).toSeq
   }
 }

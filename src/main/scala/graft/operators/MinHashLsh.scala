@@ -152,8 +152,8 @@ object MinHashLsh {
     * the 100 TB STORED layout: materialized at ingest and written
     * `bucketBy(n, "bk").sortBy("bk")`, so every subsequent near-dup
     * run's candidate self-join reads co-located, pre-sorted buckets and
-    * plans with ZERO Exchange (see [[nearDupFromBands]]; the
-    * bucketed-layout ScaleProbe case shows the shuffle disappearing on
+    * plans with ZERO Exchange (see [[nearDupFromBands]]; MinHashLshSpec's
+    * "bucketed band table … zero bk-Exchange" test pins the plan on
     * stored data). Stored `mh` is a plain column, so per-component
     * getItem references are cheap (unlike the from-text path, where the
     * fused band-key kernel avoids re-running the md5 family under the
@@ -221,8 +221,9 @@ object MinHashLsh {
     * (doc_id, bk) rows are small by the trigger's construction), so the
     * stored band table streams through its bucket layout with ZERO
     * band-key Exchange on either side — per-batch shuffle work is
-    * candidate/verify-sized, never corpus-sized (probe-asserted in the
-    * ScaleProbe corpus-ingest case). Verify reads `storedSig` with the
+    * candidate/verify-sized, never corpus-sized (plan-asserted by
+    * CorpusIngestSpec's "bucketed band table: … zero band-key Exchange
+    * vs store" test). Verify reads `storedSig` with the
     * candidate set AQE-broadcast into it, as in [[nearDupAgainst]]. */
   def nearDupAgainstBands(newSig: DataFrame, storedBands: DataFrame,
                           storedSig: DataFrame,

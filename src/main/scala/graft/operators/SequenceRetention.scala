@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions.udaf
   * most k rows per user per partition and the shuffle carries
   * O(users × k) REGARDLESS of history length. At 100× longer
   * histories the scan grows 100× but per-task state and the exchange
-  * stay flat — the probe-measured property (ScaleProbe `x100`),
-  * not a doc note.
+  * stay flat — SequenceRetentionSpec's "buffer never exceeds k" test
+  * pins the bound, so this is not a doc note.
   *
   * Determinism: (us DESC, id DESC) with a unique id is a total order,
   * so the kept tail is bit-identical under any partitioning and

@@ -86,9 +86,9 @@ case class BatchVerdict(
   * manifest body (parsed by [[ManifestParser.parseLines]]), the
   * collected `(seqnum, name, md5, failed)` rows and the scope listings
   * from [[Store.list]] (see [[verdict]]). Those rows are a few per day
-  * for a daily feed and about 100k for three decades of one (ScaleProbe
-  * `manifest_100k`), so sending them through Spark operators would only
-  * add job dispatch.
+  * for a daily feed, and even a manifest covering three decades of one
+  * holds about 30 × 365 × 10 ≈ 100k, so sending them through Spark
+  * operators would only add job dispatch.
   */
 object ArchivePipeline {
 

@@ -773,7 +773,8 @@ object AuditQueries {
     val hist = deg.groupBy(col("degree")).agg(count(lit(1)).as("n_docs"))
     // r15: the degree-0 count is ARITHMETIC, not an anti-join — deg has
     // one row per doc_id with a neighbor (its doc_ids all exist in
-    // documents, whose doc_id is unique), so n_zero = |documents| −
+    // documents, whose doc_id is unique — AuditSpec's "q125 contract"
+    // test checks it on the fixtures), so n_zero = |documents| −
     // Σ hist.n_docs. |documents| reads parquet footer statistics
     // (Tables.rowCount — metadata, no job); the corpus scan + anti-join
     // + its exchange disappear. hist's second consumer refolds the

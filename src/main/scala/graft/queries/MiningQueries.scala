@@ -1238,23 +1238,27 @@ object MiningQueries {
     // past the first element = min-over-frame-including-current. The
     // r14 form spent a pin job + a collect_list median job + a global
     // window job on the same ≤ days rows. Over the gate the r14
-    // distributed form runs unchanged below.
+    // distributed form runs unchanged below. So does a fold holding a
+    // null day (null ts) or null daily_cents (a day of null values):
+    // the replay has no null arithmetic, the window form's sum/min
+    // skip nulls, and MiningSpec pins both tiers equal on such data.
     val limit = s.conf.getOption(CusumLocalDayLimitKey)
       .map(_.toInt).getOrElse(200000)
-    val rows = daily.as[(java.sql.Date, Long)].take(limit + 1)
-    if (rows.length <= limit) {
+    val rows = daily.as[(java.sql.Date, java.lang.Long)].take(limit + 1)
+    if (rows.length <= limit && rows.forall(r => r._1 != null && r._2 != null)) {
       if (rows.isEmpty)
         Seq.empty[(java.sql.Date, Long, Long, Long, Long, Long)]
           .toDF("day", "daily_cents", "cusum_hi_cents", "cusum_lo_cents",
             "alarm_hi", "alarm_lo")
       else {
-        val vals = rows.map(_._2).sorted
+        val vals = rows.map(_._2.longValue).sorted
         val m = vals((vals.length - 1) / 2)
         val k = m / 20
         val h = m / 2
         var pHi = 0L; var pLo = 0L
         var minHi = Long.MaxValue; var minLo = Long.MaxValue
-        val out = rows.sortBy(_._1.getTime).toSeq.map { case (day, cents) =>
+        val out = rows.sortBy(_._1.getTime).toSeq.map { case (day, boxed) =>
+          val cents = boxed.longValue
           pHi += cents - m - k
           pLo += m - cents - k
           minHi = math.min(minHi, pHi)

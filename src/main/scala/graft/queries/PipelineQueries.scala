@@ -37,7 +37,8 @@ object PipelineQueries {
     * only — each document emits 4 of them, near-dups collide, the
     * quadratic blowup is confined to same-band buckets and streamed out
     * of a spill-capable sort-merge join (bounded task memory even when
-    * every document is identical — see the ScaleProbe flood case).
+    * every document is identical — see MinHashLshSpec's "identical-doc
+    * flood" test).
     * Signature computation is embarrassingly parallel; at 100 TB the
     * signatures are computed once at ingest and stored as columns, so
     * the band join + verify re-join is the whole query.
@@ -8818,11 +8819,10 @@ object PipelineQueries {
     * [[graft.operators.SequenceRetention]] — a partial-aggregable
     * typed fold whose buffer is O(K), so map-side combine ships ≤ K
     * rows per user per partition and per-task state stays FLAT as
-    * histories grow (probed at 100×, ScaleProbe `x100`, beside the
-    * window form that doesn't). From the kept tail: total history
-    * length, kept length, the tail's time span, the session
-    * fingerprint (event types oldest→newest, the next-action-model
-    * feature), and the purchase count in the tail — the
+    * histories grow (the per-user lag window does not). From the kept
+    * tail: total history length, kept length, the tail's time span, the
+    * session fingerprint (event types oldest→newest, the
+    * next-action-model feature), and the purchase count in the tail — the
     * recency-feature extraction every personalization pipeline runs.
     *
     * The ORACLE replays the same tail with a row_number window

@@ -55,41 +55,6 @@ class BpeSpec extends SparkSpec {
     assert(got == expect, s"\ngot:    $got\nexpect: $expect")
   }
 
-  test("batched trainer: merge list IDENTICAL to sequential on the fixture corpus") {
-    val k = 16
-    val seqMerges = Bpe.train(docs, k).map(m => (m.a, m.b, m.freq))
-    val batMerges = Bpe.trainBatched(docs, k, batch = 4).map(m => (m.a, m.b, m.freq))
-    assert(batMerges == seqMerges,
-      s"\nbatched:    $batMerges\nsequential: $seqMerges")
-  }
-
-  test("batched trainer at batch=1 degenerates to the exact sequential trainer") {
-    val seqMerges = Bpe.train(docs, 6).map(m => (m.a, m.b, m.freq))
-    val batMerges = Bpe.trainBatched(docs, 6, batch = 1).map(m => (m.a, m.b, m.freq))
-    assert(batMerges == seqMerges)
-  }
-
-  test("batched trainer stays exact on adversarial corpora (runs, chains, plateaus)") {
-    // repeated-character runs (same-symbol pairs create (aa,a) chains),
-    // overlapping chains (ab/bc/cd compete for b and c), and flat-
-    // frequency plateaus (ties everywhere) — each a case where a naive
-    // batch would diverge; the stopping rule must keep the list exact
-    val corpora = Seq(
-      Seq.fill(50)("aaaa") ++ Seq.fill(30)("aaa"),
-      Seq.fill(40)("abcd") ++ Seq.fill(35)("bcd") ++ Seq.fill(30)("cd"),
-      Seq.fill(20)("xy") ++ Seq.fill(20)("yz") ++ Seq.fill(20)("zw"),
-      (0 until 60).map(i => ("abcdef".take(2 + i % 5)) * (1 + i % 3)))
-    for ((words, ci) <- corpora.zipWithIndex) {
-      val df = words.toDF("text")
-      for (batch <- Seq(2, 4, 8)) {
-        val seqMerges = Bpe.train(df, 10).map(m => (m.a, m.b, m.freq))
-        val batMerges = Bpe.trainBatched(df, 10, batch).map(m => (m.a, m.b, m.freq))
-        assert(batMerges == seqMerges,
-          s"corpus $ci batch $batch:\nbatched:    $batMerges\nsequential: $seqMerges")
-      }
-    }
-  }
-
   test("local trainer: merge list IDENTICAL to sequential on the fixture corpus") {
     val k = 24
     val seqMerges = Bpe.train(docs, k).map(m => (m.a, m.b, m.freq))
@@ -99,8 +64,8 @@ class BpeSpec extends SparkSpec {
   }
 
   test("local trainer stays exact on adversarial corpora (runs, chains, plateaus)") {
-    // the incremental count updates must survive the same cases the
-    // batched stopping rule is tested on: same-symbol runs (left-to-
+    // the incremental count updates must survive the cases where a
+    // naive incremental update diverges: same-symbol runs (left-to-
     // right non-overlap semantics), overlapping chains (a merge
     // changes its neighbors' counts), and tie plateaus (UTF-8 byte
     // tie-break on the joined key)

@@ -238,6 +238,17 @@ class AuditSpec extends SparkSpec {
       s"degree mass $pairSum != 2 × ${q19Pairs} q19 pairs")
   }
 
+  test("q125 contract: documents.doc_id is unique on the sf0.001 and sf0.01 fixtures") {
+    // q125's degree-0 count is |documents| − Σ n_docs, exact only when
+    // no doc_id repeats: compare the distinct count to the footer count
+    for (dir <- Seq(sf0001, "/root/testdata/sf0.01")) {
+      val nDistinct = Tables.load(spark, dir, "documents")
+        .agg(countDistinct(col("doc_id"))).as[Long].head()
+      val nRows = Tables.rowCount(spark, dir, "documents")
+      assert(nDistinct == nRows, s"$dir: $nDistinct distinct doc_ids in $nRows rows")
+    }
+  }
+
   test("q127: LSH pairs are a subset of exact pairs and counts agree with q19/q21") {
     val got = AuditQueries.q127(spark, sf0001)
       .as[(Long, Long, Long, Double)].head()

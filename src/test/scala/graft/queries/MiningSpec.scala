@@ -452,6 +452,30 @@ class MiningSpec extends SparkSpec {
     }
   }
 
+  test("q189: a null day or an all-null-value day takes the distributed tier, equal to the forced fallback") {
+    // day 5's values are all null (daily_cents null) and one row has a
+    // null ts (a null day): the driver replay decodes Longs and would
+    // throw, so the default cap must yield the over-gate form's rows
+    val ev = (1 to 10).map { dd =>
+      (dd.toLong, java.sql.Timestamp.valueOf(f"2024-06-$dd%02d 12:00:00"),
+        1L, "click", if (dd == 5) None else Some(1.00 * dd), "{}")
+    } :+ ((11L, null: java.sql.Timestamp, 1L, "click", Some(3.00), "{}"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_cusum_null").toString
+    ev.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    def run() = MiningQueries.q189(spark, dir).collect().toSeq
+    try {
+      val dflt = run()
+      assert(dflt.length == 11, s"expected 10 days + the null day, got $dflt")
+      spark.conf.set(MiningQueries.CusumLocalDayLimitKey, "0")
+      val forced = run()
+      assert(dflt == forced, s"default cap diverged:\n$dflt\nforced:\n$forced")
+    } finally {
+      spark.conf.unset(MiningQueries.CusumLocalDayLimitKey)
+      graft.core.Pins.release()
+    }
+  }
+
   test("q190: crafted islands count exactly; real-data streaks match a brute-force replay") {
     val ev = Seq(1, 2, 3, 5, 6, 10).zipWithIndex.map { case (dd, i) =>
       ((i + 1).toLong, java.sql.Timestamp.valueOf(f"2024-06-$dd%02d 12:00:00"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.tools.PlanStats
 
 /** Repo-wide plan-audit RATCHET: the number of parquet scans each
   * declared query plans must never exceed the audited baseline. The
@@ -20,8 +21,7 @@ class PlanAuditSpec extends SparkSpec {
     val baseline = PlanAuditSpec.ScanBaseline
     val over = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val plan = fn(spark, sf0001).queryExecution.executedPlan.toString
-        val scans = plan.linesIterator.count(_.contains("Scan parquet"))
+        val scans = PlanStats.scans(fn(spark, sf0001).queryExecution.executedPlan.toString)
         val allowed = baseline.getOrElse(name, PlanAuditSpec.DefaultMax)
         if (scans > allowed) Some(s"$name: $scans scans (baseline $allowed)")
         else None
@@ -69,9 +69,8 @@ class PlanAuditSpec extends SparkSpec {
     val baseline = PlanAuditSpec.ShuffleBaseline
     val over = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val plan = fn(spark, sf0001).queryExecution.executedPlan.toString
-        val shuffles = plan.linesIterator.count(l =>
-          l.contains("Exchange ") && !l.contains("BroadcastExchange"))
+        val shuffles =
+          PlanStats.shuffles(fn(spark, sf0001).queryExecution.executedPlan.toString)
         val allowed = baseline.getOrElse(name, PlanAuditSpec.DefaultMaxShuffles)
         if (shuffles > allowed) Some(s"$name: $shuffles shuffles (baseline $allowed)")
         else None
@@ -422,8 +421,9 @@ object PlanAuditSpec {
     // per ROLE (supplier's nation, customer's nation); both role chains
     // broadcast, so the double scan is dimension-sized by construction
     "q162_volume_shipping" -> 6,
-    // q132: intervals pinned (three consumers — start/end deltas via
-    // one explode, grid bounds — read the pin); events scans ONCE
+    // q132 (r15): the hours-sized deltas are pinned and read by two
+    // consumers (grid bounds, the final join); the intervals relation
+    // has one consumer and no pin; events scans ONCE
     "q132_sliding_distinct" -> 1,
     "q38_tfidf" -> 2,
     // q62 reads the MEMOIZED inverted index + stats (ExistingRDD, built
