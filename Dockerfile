@@ -30,10 +30,10 @@ RUN chmod +x /app/graft-downloader
 ENV GRAFT_JAR=/app/graft.jar \
     SPARK_JARS_DIR=/opt/spark/jars \
     GRAFT_METRICS_PORT=9090
-# Further config (all optional): GRAFT_AUTH_USER / GRAFT_AUTH_PASS
-# (Basic Auth — the license-key pattern), GRAFT_CHECKPOINT (switches to
-# the streaming form whose engine checkpoint is the watermark
-# authority), GRAFT_INTERVAL_MS, GRAFT_CPUS, GRAFT_DRIVER_MEM.
+# Further config (all optional): GRAFT_FEEDS (the feeds per iteration,
+# replacing the manifest URL argument), GRAFT_AUTH_USER / GRAFT_AUTH_PASS
+# (Basic Auth — the license-key pattern), GRAFT_METRICS_FILE,
+# GRAFT_CPUS, GRAFT_DRIVER_MEM; see tools/graft-downloader.
 EXPOSE 9090
 ENTRYPOINT ["/app/graft-downloader"]
 # store root + manifest URL — override per deployment

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{Metrics, Sinks, Tables}
 import graft.operators.HashDedup
 import graft.plans.{ArchivePipeline, SourceConfig}
-import graft.sources.{HttpFetcher, LocalFsStore}
+import graft.sources.{HadoopFsStore, HttpFetcher}
 
 import scala.util.matching.Regex
 
@@ -23,7 +23,7 @@ object Demo {
     val spark = graft.core.Sessions.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val root = Files.createTempDirectory("graft_demo_store").toString
-    val store = new LocalFsStore(root)
+    val store = new HadoopFsStore(root)
 
     // --- 1. Incremental archive ingestion (reference E3 semantics) over
     // LIVE HTTP: an embedded localhost server plays the routeviews feed,

@@ -112,10 +112,12 @@ object ArchivePipeline {
         cfg.retryInitialMs.millis, cfg.retryMaxMs.millis, sleep) {
       val (_, md5) = fetcher.fetchTo(url, store, name)
       val scope = Naming.scopeOf(cfg.dedupScopeRegex, name)
-      val isDup = store.list(scope).exists(o => o.name != name && o.md5.contains(md5))
-      if (isDup) {
+      val holders = store.list(scope).filter(o => o.name != name && o.md5.contains(md5))
+      if (holders.nonEmpty) {
         store.delete(name) // delete failure throws PermanentError → aborts
-        IngestReport(0L, Nil, Seq(name), Nil, Nil)
+        val own = holders.map(_.name).filter(_.startsWith(cfg.pathPrefix))
+        val promoted = own.maxOption.flatMap(promoteHolder(cfg, store, _, md5))
+        IngestReport(0L, Nil, Seq(name), Nil, promoted.toSeq)
       } else {
         store.copy(name, cfg.currentName)
         IngestReport(0L, Seq(name), Nil, Nil, Seq(cfg.currentName))
@@ -123,7 +125,28 @@ object ArchivePipeline {
     }
   }
 
-  /** One incremental run over a routeviews-style manifest feed. */
+  /** A duplicate fixed fetch promotes nothing of its own, but `current`
+    * must still serve its bytes: a run that wrote them and then failed
+    * to promote (a failed copy, or a crash between the write and the
+    * copy) leaves the unpromoted object in scope, and every later fetch
+    * of the same bytes is its duplicate. When `current`'s md5 differs
+    * from the fetched one, copy `holder`, the feed's newest in-scope
+    * object with the fetched bytes, to `current`; returns the promoted
+    * name.
+    */
+  private def promoteHolder(cfg: SourceConfig, store: Store, holder: String,
+                            md5: String): Option[String] = {
+    val current = store.list(cfg.currentName).find(_.name == cfg.currentName)
+    if (current.exists(_.md5.contains(md5))) None
+    else {
+      store.copy(holder, cfg.currentName)
+      Some(cfg.currentName)
+    }
+  }
+
+  /** One incremental run over a routeviews-style manifest feed:
+    * manifest scan → watermark filter → fetch → dedup → promote →
+    * gated advance. */
   def run(spark: SparkSession,
           manifestBody: String,
           manifestUrl: String,
@@ -138,25 +161,6 @@ object ArchivePipeline {
       .map(e => (e.seqnum.toLong, ManifestParser.absoluteUrl(manifestUrl, e.path)))
     if (fresh.isEmpty)
       return IngestReport(watermark, Nil, Nil, Nil, Nil)
-    val rep = ingest(spark, fresh, cfg, store, fetcher, metrics)
-    rep.copy(newWatermark = math.max(watermark, rep.newWatermark))
-  }
-
-  /** Fetch → dedup → promote → gated advance for an ALREADY
-    * watermark-filtered batch of `(seqnum, absoluteUrl)` work items —
-    * the tail of [[run]], exposed so the STREAMING daemon can call it
-    * per micro-batch (the `graft-manifest` source's checkpointed offset
-    * has already done the filtering there). `newWatermark` is the gated
-    * advance over THIS batch only; [[run]] maxes it with the incoming
-    * watermark.
-    */
-  def ingest(spark: SparkSession,
-             fresh: Seq[(Long, String)],
-             cfg: SourceConfig,
-             store: Store,
-             fetcher: Fetcher,
-             metrics: Metrics): IngestReport = {
-    if (fresh.isEmpty) return IngestReport(0L, Nil, Nil, Nil, Nil)
 
     // 2. Distributed fetch + store write (O9-O10), the batch's one Spark
     // job. Each task fetches, derives the archive key, writes, and emits
@@ -201,7 +205,7 @@ object ArchivePipeline {
       cfg.currentName
     }.toSeq
 
-    IngestReport(v.newWatermark, v.kept, v.duplicates, v.failed, promoted)
+    IngestReport(math.max(watermark, v.newWatermark), v.kept, v.duplicates, v.failed, promoted)
   }
 
   /** Archive key of a manifest work item (O10): the fixed name, or the

@@ -2,9 +2,7 @@ package graft.plans
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
 
 import graft.core.{Metrics, MetricsHttpEndpoint, MetricsPublisher, MetricsSink}
 import graft.sources.{HttpFetcher, Store}
@@ -124,64 +122,6 @@ object Downloader {
       interval = interval, deviation = deviation, sleep = sleep)
   }
 
-  /** The STRUCTURED-STREAMING form of the daemon:
-    * `readStream.format("graft-manifest")` →
-    * `foreachBatch(ArchivePipeline.ingest)`. Here the source's
-    * checkpointed seqnum offset IS the watermark — one engine-managed
-    * authority (no `_meta/watermark` key, no second copy of the
-    * invariant; the driver-loop form and this one implement the same
-    * reference semantics, downloader.go:59-103, but this one lets the
-    * engine own the state).
-    *
-    * Each micro-batch carries exactly the manifest rows above the
-    * restored offset; its files fetch/dedup/promote through the same
-    * pipeline tail as the loop form. A batch containing FAILED files
-    * throws, so the offset does NOT commit and a restart replays the
-    * same rows — the streaming analog of the gated watermark advance
-    * (routeviews.go:56-62). Replays are safe because archive writes are
-    * idempotent by key and dedup is content-hash based. Collecting the
-    * batch rows driver-side mirrors [[ArchivePipeline.run]]: they are
-    * manifest METADATA (seqnum, url); the heavy per-file fetch fans out
-    * in executor tasks inside `ingest`.
-    */
-  def stream(spark: SparkSession,
-             store: Store,
-             fetcher: graft.plans.Fetcher,
-             metrics: Metrics,
-             feed: ManifestFeed,
-             checkpointDir: String,
-             trigger: Trigger = Trigger.AvailableNow(),
-             onBatchSuccess: Long => Unit = _ => ()): StreamingQuery = {
-    val processBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
-      import batch.sparkSession.implicits._
-      val items = batch.select(col("seqnum"), col("url"))
-        .as[(Long, String)].collect().toSeq
-      if (items.nonEmpty) {
-        val report = ArchivePipeline.ingest(
-          spark, items, feed.cfg, store, fetcher, metrics)
-        if (report.failed.nonEmpty)
-          throw new IllegalStateException(
-            s"${report.failed.size} file(s) failed " +
-            s"(seqnums ${report.failed.mkString(",")}); batch not " +
-            "committed — a restart replays it (gated-advance semantics)")
-      }
-      // The streaming analog of the loop form's per-iteration hook: with
-      // Trigger.ProcessingTime a healthy query NEVER terminates, so
-      // metrics publication / all-success marking must happen per
-      // successful batch — publishing only after awaitTermination would
-      // publish only on failure.
-      onBatchSuccess(batchId)
-    }
-    spark.readStream.format("graft-manifest")
-      .option("url", feed.manifestUrl).load()
-      .writeStream
-      .queryName(s"graft-downloader-${feed.cfg.dataset}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(processBatch)
-      .start()
-  }
-
   /** Build the per-iteration feed list from a config string — the
     * reference daemon's deployed shape is THREE sources per iteration
     * (MaxMind fixed files + RouteViews IPv4 + IPv6 manifests,
@@ -243,15 +183,10 @@ object Downloader {
     * succeeds (downloader.go:98-100). Without GRAFT_FEEDS, args(1) is a
     * single RouteViews-shaped manifest URL (unchanged contract).
     *
-    * With GRAFT_CHECKPOINT set, runs the streaming form ([[stream]]):
-    * the engine checkpoint at that path is the single watermark
-    * authority, triggering every GRAFT_INTERVAL_MS (default 24 h). A
-    * failed batch terminates the query WITHOUT committing its offset;
-    * the supervision loop below restarts it after a short backoff, so
-    * the failed files replay — the daemon-level equivalent of the
-    * reference retrying un-advanced seqnums next iteration. Without
-    * GRAFT_CHECKPOINT, runs the driver-loop form with store-persisted
-    * watermarks. */
+    * The loop runs forever, one iteration per 24 h ± 2 h of uniform
+    * jitter (downloader.go:59-103), and publishes the metric series to
+    * GRAFT_METRICS_FILE (default /tmp/graft_metrics.prom) after each
+    * iteration. */
   def main(args: Array[String]): Unit = {
     // Operational subcommand, the reference's UpdateCurrent.sh crash
     // recovery: re-derive a current pointer from the listing and exit.
@@ -282,65 +217,9 @@ object Downloader {
           "usage: Downloader <storeRootUri> <manifestUrl> (or set GRAFT_FEEDS)")
         (Seq(ManifestFeed(routeviewsConfig("RouteViewIPv4"), args(1))), Nil)
     }
-    try sys.env.get("GRAFT_CHECKPOINT") match {
-      case Some(ckpt) =>
-        val interval = sys.env.getOrElse("GRAFT_INTERVAL_MS",
-          (24L * 3600 * 1000).toString).toLong
-        val publisher = new MetricsPublisher(spark, metrics,
-          new graft.core.TextFileMetricsSink(
-            sys.env.getOrElse("GRAFT_METRICS_FILE", "/tmp/graft_metrics.prom")))
-        require(fixedFeeds.isEmpty,
-          "fixed feeds are loop-scheduled — run them without " +
-            "GRAFT_CHECKPOINT (a fixed feed has no offset to checkpoint)")
-        // the all-success gauge folds over EVERY feed, exactly like the
-        // loop form (downloader.go:98-100): each query flips its own
-        // health bit per batch; the gauge marks only when all are true
-        val health = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-        manifestFeeds.foreach(f => health.put(f.cfg.dataset, false))
-        def onFeedSuccess(ds: String): Unit = {
-          health.put(ds, true)
-          if (manifestFeeds.forall(f => health.get(f.cfg.dataset)))
-            metrics.markAllSuccess(System.currentTimeMillis() / 1000L)
-          publisher.publishNow()
-        }
-        // one query per manifest feed, each with its own checkpoint
-        // subdirectory (per-feed offset authority, like the reference's
-        // per-feed lastDownloaded ints); supervision restarts ONLY the
-        // feeds whose query died — a healthy sibling keeps running (a
-        // failed batch never committed its offset, so the restart
-        // replays it: gated-advance semantics)
-        val running = scala.collection.mutable.Map.empty[String, StreamingQuery]
-        // exactly one feed keeps the BARE ckpt root — the pre-multi-feed
-        // layout — so a single-feed deployment upgrading in place resumes
-        // its existing offset/watermark history instead of silently
-        // starting a fresh checkpoint under ckpt/<dataset>
-        def ckptPath(f: ManifestFeed): String =
-          if (manifestFeeds.size == 1) ckpt else s"$ckpt/${f.cfg.dataset}"
-        def startFeed(f: ManifestFeed): Unit =
-          running(f.cfg.dataset) = stream(spark, store, fetcher, metrics, f,
-            ckptPath(f), Trigger.ProcessingTime(interval),
-            onBatchSuccess = _ => onFeedSuccess(f.cfg.dataset))
-        manifestFeeds.foreach(startFeed)
-        while (true) {
-          try spark.streams.awaitAnyTermination()
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"stream failed (will replay batch): ${e.getMessage}")
-          }
-          spark.streams.resetTerminated()
-          val dead = manifestFeeds.filter(f =>
-            running.get(f.cfg.dataset).exists(!_.isActive))
-          dead.foreach(f => health.put(f.cfg.dataset, false))
-          // post-mortem publish: surfaces the failure-state counters even
-          // though the failed batch's own onBatchSuccess never ran
-          publisher.publishNow()
-          Thread.sleep(sys.env.getOrElse("GRAFT_RESTART_BACKOFF_MS", "60000").toLong)
-          dead.foreach(startFeed)
-        }
-      case None =>
-        loop(spark, store, fetcher, metrics, new graft.core.TextFileMetricsSink(
-            sys.env.getOrElse("GRAFT_METRICS_FILE", "/tmp/graft_metrics.prom")),
-          manifestFeeds, fixedFeeds, iterations = Int.MaxValue)
-    }
+    try loop(spark, store, fetcher, metrics, new graft.core.TextFileMetricsSink(
+        sys.env.getOrElse("GRAFT_METRICS_FILE", "/tmp/graft_metrics.prom")),
+      manifestFeeds, fixedFeeds, iterations = Int.MaxValue)
     finally { endpoint.stop(); spark.stop() }
   }
 }

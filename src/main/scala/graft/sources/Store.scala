@@ -1,9 +1,7 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
 import scala.collection.concurrent.TrieMap
-import scala.jdk.CollectionConverters._
 
 /** Object metadata row: the engine's core catalog relation
   * `(name STRING, md5 BINARY-as-hex)` — see /root/reference/file/api.go:52-65
@@ -39,7 +37,7 @@ trait Store extends Serializable {
     * the fly so dedup never re-reads the payload. The DEFAULT buffers
     * the whole payload (write() takes bytes), so it is only suitable for
     * blobs that fit in memory — true O(buffer) streaming is up to the
-    * impl (LocalFsStore streams straight to disk).
+    * impl ([[HadoopFsStore]] streams straight to a temp file).
     */
   def writeStream(name: String, in: java.io.InputStream): (Long, String) = {
     val out = new java.io.ByteArrayOutputStream()
@@ -107,64 +105,4 @@ class InMemoryStore extends Store {
     if (name.endsWith("deleteFail")) throw PermanentError(s"injected delete failure: $name")
     objects.remove(name)
   }
-}
-
-/** Local-filesystem store: names are relative paths under `root`. The
-  * production analog is an HDFS-/object-store-backed impl behind the same
-  * trait.
-  */
-class LocalFsStore(rootDir: String) extends Store {
-  private def root: Path = Paths.get(rootDir)
-  private def p(name: String): Path = root.resolve(name)
-
-  def list(prefix: String): Seq[ObjectMeta] = {
-    if (!Files.exists(root)) return Seq.empty
-    val walk = Files.walk(root)
-    try {
-      walk.iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .map(f => root.relativize(f).toString)
-        // in-flight .part temp files are not committed objects
-        .filterNot(_.split('/').last.startsWith("."))
-        .filter(_.startsWith(prefix))
-        .map { n =>
-          val bytes = Files.readAllBytes(p(n))
-          ObjectMeta(n, Some(Store.md5Hex(bytes)), bytes.length.toLong)
-        }
-        .toSeq.sortBy(_.name)
-    } finally walk.close() // Files.walk holds open DirectoryStreams
-  }
-
-  def read(name: String): Array[Byte] = Files.readAllBytes(p(name))
-
-  def write(name: String, content: Array[Byte]): Unit = {
-    Files.createDirectories(p(name).getParent)
-    Files.write(p(name), content)
-  }
-
-  /** True O(buffer) streaming: bytes flow disk-ward as they arrive, via
-    * a dot-prefixed temp file committed by rename only on success — a
-    * mid-stream failure never leaves a truncated blob at the final name
-    * (the reference's GCS writer likewise commits on Close). */
-  override def writeStream(name: String, in: java.io.InputStream): (Long, String) = {
-    val target = p(name)
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling("." + target.getFileName + ".part")
-    val out = Files.newOutputStream(tmp)
-    try {
-      val res = try Store.drain(in, out) finally out.close()
-      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-      res
-    } catch {
-      case e: Throwable => Files.deleteIfExists(tmp); throw e
-    }
-  }
-
-  def copy(src: String, dst: String): Unit = {
-    Files.createDirectories(p(dst).getParent)
-    Files.copy(p(src), p(dst), StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def delete(name: String): Unit = Files.deleteIfExists(p(name))
 }

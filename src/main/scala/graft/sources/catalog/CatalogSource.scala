@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.LocalFsStore
+import graft.sources.HadoopFsStore
 
 /** DataSource V2 provider exposing an object-store catalog as the
   * relation `(name STRING, md5 STRING, size BIGINT)` with **prefix
@@ -25,7 +25,8 @@ import graft.sources.LocalFsStore
   * the pushdown: `.explain` shows PushedFilters on the scan and the
   * store is only asked for the scope.
   *
-  * Usage: `spark.read.format("graft-catalog").option("root", dir).load()`.
+  * Usage: `spark.read.format("graft-catalog").option("root", dir).load()`,
+  * where `dir` is a local path or any Hadoop filesystem URI.
   * Scale note: one [[InputPartition]] per top-level prefix would shard a
   * huge catalog across tasks; a single partition suffices for the
   * metadata sizes here.
@@ -114,7 +115,7 @@ private class CatalogReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CatalogInputPartition]
     new PartitionReader[InternalRow] {
-      private val it = new LocalFsStore(p.root).list(p.prefix).iterator
+      private val it = new HadoopFsStore(p.root).list(p.prefix).iterator
       private var current: InternalRow = _
       override def next(): Boolean = {
         if (!it.hasNext) return false

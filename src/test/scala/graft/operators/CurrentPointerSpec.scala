@@ -38,7 +38,7 @@ class CurrentPointerSpec extends SparkSpec {
   test("repair re-derives a stale current pointer from the listing (UpdateCurrent.sh semantics)") {
     import java.nio.charset.StandardCharsets.UTF_8
     val root = java.nio.file.Files.createTempDirectory("graft_repair").toString
-    val store = new graft.sources.LocalFsStore(root)
+    val store = new graft.sources.HadoopFsStore(root)
     val current = "rv/current/routeview.pfx2as.gz"
     // a crash left `current` pointing at January's content
     store.write("rv/2024/01/20240115-routeview.pfx2as.gz", "jan".getBytes(UTF_8))
@@ -57,7 +57,7 @@ class CurrentPointerSpec extends SparkSpec {
     // even though `current` ends with the suffix, an archive-free store
     // leaves the pointer untouched instead of self-promoting or deleting
     val root2 = java.nio.file.Files.createTempDirectory("graft_repair2").toString
-    val store2 = new graft.sources.LocalFsStore(root2)
+    val store2 = new graft.sources.HadoopFsStore(root2)
     store2.write(current, "only-copy".getBytes(UTF_8))
     assert(CurrentPointer.repair(store2, "rv/", "routeview.pfx2as.gz", current).isEmpty)
     assert(new String(store2.read(current), UTF_8) == "only-copy")

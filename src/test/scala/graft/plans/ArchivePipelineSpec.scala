@@ -23,6 +23,22 @@ object ArchivePipelineSpec {
         .getOrElse(throw new RuntimeException(s"404: $url"))
     }
   }
+
+  /** Delegating store whose first `copy` fails permanently: a promotion
+    * lost after the write, as a failed copy or a crash between the write
+    * and the copy leaves it. */
+  class CopyFailsOnce(inner: Store) extends Store {
+    private var failed = false
+    def list(prefix: String): Seq[graft.sources.ObjectMeta] = inner.list(prefix)
+    def read(name: String): Array[Byte] = inner.read(name)
+    def write(name: String, content: Array[Byte]): Unit = inner.write(name, content)
+    override def writeStream(name: String, in: java.io.InputStream): (Long, String) =
+      inner.writeStream(name, in)
+    def delete(name: String): Unit = inner.delete(name)
+    def copy(src: String, dst: String): Unit =
+      if (failed) inner.copy(src, dst)
+      else { failed = true; throw PermanentError(s"injected copy failure: $src") }
+  }
 }
 
 class ArchivePipelineSpec extends SparkSpec {
@@ -233,6 +249,35 @@ class ArchivePipelineSpec extends SparkSpec {
     val dupName = "Maxmind/2017/09/16/20170916T102030Z-GeoLite2-City.tar.gz"
     assert(r2 == Right(IngestReport(0L, Nil, Seq(dupName), Nil, Nil)))
     assert(store.list("Maxmind/2017/09/1").map(_.name) == Seq(expectName))
+  }
+
+  test("fixed-name source: a duplicate of an unpromoted object promotes it to current") {
+    val store = new InMemoryStore
+    val (_, Seq(mmFeed)) = Downloader.parseFeeds("fixed|Maxmind|GeoLite2-City.tar.gz|http://x/city.tgz")
+    val mm = mmFeed.cfg.copy(retryInitialMs = 1, retryMaxMs = 0)
+    def day(d: Int) = java.time.Instant.parse(f"2017-09-$d%02dT10:20:30Z")
+    def bytes(v: String) = new ArchivePipelineSpec.MapFetcher(Map("city.tgz" -> v))
+    def current = new String(store.read(mm.currentName), "UTF-8")
+
+    // day 1 archives v1 and promotes it
+    assert(ArchivePipeline.runFixedSource(mm, mmFeed.url, store, bytes("v1"), day(15)).isRight)
+    assert(current == "v1")
+    // day 2 writes v2, then the promoting copy fails
+    val failing = new ArchivePipelineSpec.CopyFailsOnce(store)
+    assert(ArchivePipeline.runFixedSource(mm, mmFeed.url, failing, bytes("v2"), day(16)).isLeft)
+    val day2 = "Maxmind/2017/09/16/20170916T102030Z-GeoLite2-City.tar.gz"
+    assert(store.list("Maxmind/2017/09/").map(_.name).contains(day2))
+    assert(current == "v1")
+    // day 3 fetches v2 again: a duplicate of day 2's object, which it promotes
+    val day3 = "Maxmind/2017/09/17/20170917T102030Z-GeoLite2-City.tar.gz"
+    assert(ArchivePipeline.runFixedSource(mm, mmFeed.url, store, bytes("v2"), day(17)) ==
+      Right(IngestReport(0L, Nil, Seq(day3), Nil, Seq(mm.currentName))))
+    assert(current == "v2")
+    assert(!store.list("Maxmind/2017/09/").map(_.name).contains(day3))
+    // day 4: current already holds v2, so a duplicate promotes nothing
+    val day4 = "Maxmind/2017/09/18/20170918T102030Z-GeoLite2-City.tar.gz"
+    assert(ArchivePipeline.runFixedSource(mm, mmFeed.url, store, bytes("v2"), day(18)) ==
+      Right(IngestReport(0L, Nil, Seq(day4), Nil, Nil)))
   }
 
   test("fixed-name source: a scope regex whose group 1 does not take part scopes to the whole store") {

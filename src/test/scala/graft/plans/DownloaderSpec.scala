@@ -7,7 +7,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.SparkSpec
 import graft.core.{InMemoryMetricsSink, Metrics}
-import graft.sources.{HttpFetcher, InMemoryStore}
+import graft.sources.{HttpFetcher, InMemoryStore, Store}
 
 import scala.util.matching.Regex
 
@@ -20,11 +20,14 @@ object DownloaderSpec {
   val permanentFailures = scala.collection.concurrent.TrieMap.empty[String, Int]
 }
 
-/** Delegating fetcher that counts per-basename fetches and injects
-  * configured permanent failures (no in-task retry) for the streaming
-  * gated-advance tests. */
-class CountingFetcher(delegate: graft.plans.Fetcher) extends graft.plans.Fetcher {
-  override def fetch(url: String): Array[Byte] = {
+/** Delegating fetcher that counts per-basename payload fetches and
+  * injects configured permanent failures (no in-task retry). It extends
+  * [[HttpFetcher]] because `Downloader.runOnce` takes that type, and
+  * counts in `fetchTo` as well as `fetch`: the pipeline streams payloads
+  * through `fetchTo`. Manifest reads (`fetchString`) are not counted. */
+class CountingFetcher(inner: HttpFetcher)
+    extends HttpFetcher(inner.basicAuthUser, inner.basicAuthPass, inner.attemptTimeout) {
+  private def count(url: String): Unit = {
     val base = url.substring(url.lastIndexOf('/') + 1)
     DownloaderSpec.fetchCounts.updateWith(base)(c => Some(c.getOrElse(0) + 1))
     val remaining = DownloaderSpec.permanentFailures.getOrElse(base, 0)
@@ -32,17 +35,22 @@ class CountingFetcher(delegate: graft.plans.Fetcher) extends graft.plans.Fetcher
       DownloaderSpec.permanentFailures.put(base, remaining - 1)
       throw graft.sources.PermanentError(s"injected failure for $base")
     }
-    delegate.fetch(url)
   }
+
+  override def fetch(url: String): Array[Byte] = { count(url); inner.fetch(url) }
+
+  override def fetchTo(url: String, store: Store, name: String): (Long, String) = {
+    count(url); inner.fetchTo(url, store, name)
+  }
+
+  override def fetchString(url: String): String = inner.fetchString(url)
 }
 
 /** The composed daemon over live HTTP: watermark persistence across
   * restarts (the deliberate fix of the reference's process-local
   * watermark amnesia, downloader.go:61-62), manifest-error metrics,
-  * all-success gauge gating, per-iteration publication — and the
-  * STREAMING form, where the graft-manifest checkpoint is the single
-  * watermark authority (exactly-once per committed batch across
-  * restarts; failed batches replay).
+  * all-success gauge gating, per-iteration publication, and the replay
+  * of a failed file on the next iteration.
   */
 class DownloaderSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
@@ -106,57 +114,32 @@ class DownloaderSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "RouteViewIPv4/2017/06/c.pfx2as.gz"))
   }
 
-  test("streaming daemon: engine checkpoint is the watermark; exactly-once across restart") {
+  test("a permanently failing file holds the watermark below it; the next run fetches only that file") {
     val store = new InMemoryStore
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dl_ckpt").toString
     DownloaderSpec.fetchCounts.clear()
+    DownloaderSpec.permanentFailures.put("c.pfx2as.gz", 1)
     val fetcher = new CountingFetcher(HttpFetcher())
-    manifestRows = Seq(3363 -> "2017/06/a.pfx2as.gz", 3364 -> "2017/06/b.pfx2as.gz")
-
-    val q1 = Downloader.stream(spark, store, fetcher, new Metrics(spark), feed, ckpt)
-    q1.awaitTermination()
-    assert(store.list("RouteViewIPv4/2017/06/").map(_.name) == Seq(
-      "RouteViewIPv4/2017/06/a.pfx2as.gz", "RouteViewIPv4/2017/06/b.pfx2as.gz"))
-    // the store-persisted watermark path is NOT used: the checkpoint owns it
-    assert(Downloader.loadWatermark(store, "RouteViewIPv4") == 0L)
-
-    // "restart": new query, same checkpoint — only the new row replays
-    manifestRows = manifestRows :+ (3365 -> "2017/06/c.pfx2as.gz")
-    val q2 = Downloader.stream(spark, store, fetcher, new Metrics(spark), feed, ckpt)
-    q2.awaitTermination()
-    assert(store.list("RouteViewIPv4/2017/06/").map(_.name).length == 3)
-    // each file fetched exactly once across both runs
-    assert(DownloaderSpec.fetchCounts.toMap ==
-      Map("a.pfx2as.gz" -> 1, "b.pfx2as.gz" -> 1, "c.pfx2as.gz" -> 1))
-
-    // an empty trigger (no new manifest rows) commits nothing and refetches nothing
-    val q3 = Downloader.stream(spark, store, fetcher, new Metrics(spark), feed, ckpt)
-    q3.awaitTermination()
-    assert(DownloaderSpec.fetchCounts.values.sum == 3)
-  }
-
-  test("streaming daemon: a failed batch does not commit; restart replays it") {
-    val store = new InMemoryStore
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dl_ckpt2").toString
-    DownloaderSpec.fetchCounts.clear()
-    DownloaderSpec.permanentFailures.put("d.pfx2as.gz", 1)
-    val fetcher = new CountingFetcher(HttpFetcher())
-    manifestRows = Seq(3400 -> "2017/07/d.pfx2as.gz")
+    manifestRows = Seq(3363 -> "2017/06/a.pfx2as.gz", 3364 -> "2017/06/b.pfx2as.gz",
+      3365 -> "2017/06/c.pfx2as.gz")
 
     val metrics = new Metrics(spark)
-    val q1 = Downloader.stream(spark, store, fetcher, metrics, feed, ckpt)
-    // the batch throws (gated-advance semantics): offset must not commit
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q1.awaitTermination()
-    }
-    assert(store.list("RouteViewIPv4/2017/07/").isEmpty)
+    assert(Downloader.runOnce(spark, store, fetcher, metrics, Seq(feed), Nil) == Seq(false))
+    // gated advance: the persisted watermark stops below the failed seqnum
+    assert(Downloader.loadWatermark(store, "RouteViewIPv4") == 3364L)
+    assert(store.list("RouteViewIPv4/2017/06/").map(_.name) == Seq(
+      "RouteViewIPv4/2017/06/a.pfx2as.gz", "RouteViewIPv4/2017/06/b.pfx2as.gz"))
+    assert(metrics.snapshot("downloader_download_failed_total{RouteViewIPv4}") == 1L)
 
-    // restart: the SAME rows replay (offset was not committed) and now succeed
-    val q2 = Downloader.stream(spark, store, fetcher, metrics, feed, ckpt)
-    q2.awaitTermination()
-    assert(store.list("RouteViewIPv4/2017/07/").map(_.name) ==
-      Seq("RouteViewIPv4/2017/07/d.pfx2as.gz"))
-    assert(DownloaderSpec.fetchCounts("d.pfx2as.gz") == 2) // failed attempt + replay
+    // the next run replays only the failed file, which now succeeds
+    assert(Downloader.runOnce(spark, store, fetcher, metrics, Seq(feed), Nil) == Seq(true))
+    assert(Downloader.loadWatermark(store, "RouteViewIPv4") == 3365L)
+    assert(store.list("RouteViewIPv4/2017/06/").map(_.name) == Seq(
+      "RouteViewIPv4/2017/06/a.pfx2as.gz", "RouteViewIPv4/2017/06/b.pfx2as.gz",
+      "RouteViewIPv4/2017/06/c.pfx2as.gz"))
+    assert(new String(store.read("RouteViewIPv4/2017/06/c.pfx2as.gz"), UTF_8) ==
+      "payload-of:/rv/2017/06/c.pfx2as.gz")
+    assert(DownloaderSpec.fetchCounts.toMap ==
+      Map("a.pfx2as.gz" -> 1, "b.pfx2as.gz" -> 1, "c.pfx2as.gz" -> 2))
   }
 
   test("manifest failure counts the routeviews-url error and fails the feed") {

@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Docs-drift ratchet: every query the engine declares must appear in
@@ -67,5 +69,38 @@ class DocsSpec extends AnyFunSuite {
       .toSet
     val missing = graft.SparkEntry.queries.keys.toSeq.sorted.filterNot(rows.contains)
     assert(missing.isEmpty, s"declared queries missing from SPEED.md: $missing")
+  }
+
+  test("the daemon's deployment settings match the code") {
+    val name = """\bGRAFT_[A-Z0-9_]+"""
+    def names(text: String, re: String): Set[String] =
+      re.r.findAllMatchIn(text).map(_.group(1)).toSet
+    def uncommented(text: String) =
+      text.linesIterator.filterNot(_.trim.startsWith("#")).mkString("\n")
+    val mainSources = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".scala")).toSeq
+      finally walk.close()
+    }
+    val readByMain = mainSources.flatMap(p => names(read(p), s"""sys\\.env(?:\\.\\w+)?\\(\\s*"($name)"""")).toSet
+    val launcher = read("tools/graft-downloader")
+    val readByLauncher = names(uncommented(launcher), s"""\\$$\\{($name)""")
+    val header = launcher.linesIterator.takeWhile(_.startsWith("#")).mkString("\n")
+    val readme = read("README.md")
+    val envLine = readme.substring(readme.indexOf("Env config:")).split("\n\n").head
+    val yaml = read("deployment/deploy-downloader.yaml")
+    val yamlArgs = names(yaml, s"""\\$$\\(($name)\\)""")
+    val setByDeploy = names(yaml, s"""name:\\s*($name)""") ++
+      names(uncommented(read("Dockerfile")), s"""($name)=""")
+
+    for ((doc, text) <- Seq("tools/graft-downloader header" -> header, "README env line" -> envLine)) {
+      val documented = names(text, s"($name)")
+      assert((readByMain -- documented).isEmpty,
+        s"read by src/main but missing from the $doc: ${(readByMain -- documented).toSeq.sorted}")
+      val stale = documented -- readByMain -- readByLauncher
+      assert(stale.isEmpty, s"documented in the $doc but read by nothing: ${stale.toSeq.sorted}")
+    }
+    val unread = setByDeploy -- readByMain -- readByLauncher -- yamlArgs
+    assert(unread.isEmpty, s"set by the deployment but read by nothing: ${unread.toSeq.sorted}")
   }
 }

@@ -18,7 +18,8 @@ import org.apache.hadoop.util.Progressable
   * the reference, /root/reference/file/api.go:44-87), so
   * [[HadoopFsStore]]'s list/copy/delete/rename semantics are proven
   * through the generic `FileSystem`/`FileContext` API surface and not
-  * the local-FS fast path ([[LocalFsStore]]) the other specs ride.
+  * the `java.nio` fast path it takes on a `file:` root, which the other
+  * specs ride.
   *
   * Deliberately object-store-shaped: a flat key → bytes map per
   * authority; directories exist only implicitly (as key prefixes) plus

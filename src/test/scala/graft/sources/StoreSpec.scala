@@ -22,8 +22,6 @@ class StoreSpec extends AnyFunSuite {
 
   private def stores: Seq[(String, () => Store)] = Seq(
     ("InMemoryStore", () => new InMemoryStore),
-    ("LocalFsStore",
-      () => new LocalFsStore(Files.createTempDirectory("graft_store").toString)),
     ("HadoopFsStore(file://)",
       () => new HadoopFsStore(
         "file://" + Files.createTempDirectory("graft_hstore").toString)),
@@ -135,13 +133,16 @@ class StoreSpec extends AnyFunSuite {
     store.copy("rv/a.gz", "rv/current/a.gz")
     store.delete("rv/b.gz")
     store.write("rv/c.gz", "c".getBytes)
+    // a bare local path resolves to the same fast path
+    new HadoopFsStore(dir.toString).write("rv/d.gz", "d".getBytes)
     assert(crcs.isEmpty)
     // the checksummed reader takes the new bytes: no stale checksum left to fail
     assert(new String(hadoop.read("rv/a.gz")) == "new-bytes")
     assert(new String(hadoop.read("rv/current/a.gz")) == "new-bytes")
     val md5 = Some(Store.md5Hex("new-bytes".getBytes))
     assert(hadoop.list("rv/").map(o => o.name -> o.md5) == Seq(
-      "rv/a.gz" -> md5, "rv/c.gz" -> Some(Store.md5Hex("c".getBytes)), "rv/current/a.gz" -> md5))
+      "rv/a.gz" -> md5, "rv/c.gz" -> Some(Store.md5Hex("c".getBytes)),
+      "rv/current/a.gz" -> md5, "rv/d.gz" -> Some(Store.md5Hex("d".getBytes))))
   }
 
   test("HadoopFsStore: a sidecar write torn after the commit lists the new bytes' md5") {

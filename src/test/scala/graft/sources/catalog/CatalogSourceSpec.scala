@@ -3,15 +3,15 @@ package graft.sources.catalog
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.sources.LocalFsStore
+import graft.sources.HadoopFsStore
 import org.apache.spark.sql.functions._
 
 class CatalogSourceSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshStore(): (String, LocalFsStore) = {
+  private def freshStore(): (String, HadoopFsStore) = {
     val dir = Files.createTempDirectory("graft_cat").toString
-    val store = new LocalFsStore(dir)
+    val store = new HadoopFsStore(dir)
     store.write("Maxmind/2017/06/a.tgz", "aaa".getBytes)
     store.write("Maxmind/2017/07/b.tgz", "bbb".getBytes)
     store.write("RouteViewIPv4/2017/06/c.gz", "ccc".getBytes)
