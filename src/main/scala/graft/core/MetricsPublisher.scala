@@ -29,11 +29,11 @@ class InMemoryMetricsSink extends MetricsSink {
   * reads a torn file. The standard agent-side pattern when a process
   * can't serve its own /metrics endpoint.
   *
-  * `publish` is synchronized: the multi-feed daemon calls it
-  * concurrently from every feed's foreachBatch thread (and from the
-  * job-end listener), and the writes share one `.tmp` sibling — an
-  * unserialized write-vs-move pair can interleave or throw
-  * NoSuchFileException inside a healthy feed's batch. */
+  * `publish` is synchronized: the daemon calls it from its loop thread
+  * after each iteration and from the listener bus after every job end,
+  * and the writes share one `.tmp` sibling — an unserialized
+  * write-vs-move pair can interleave or throw NoSuchFileException
+  * inside a healthy iteration. */
 class TextFileMetricsSink(path: String) extends MetricsSink {
   def publish(exposition: String, snapshot: Map[String, Long]): Unit = synchronized {
     val target = Paths.get(path)

@@ -9,37 +9,26 @@ import org.apache.spark.sql.functions._
   * component, not a pair list (A≈B and B≈C must collapse {A, B, C} to
   * one survivor even when A and C never paired directly).
   *
-  * [[connectedComponents]] is iterative min-label propagation on
-  * DataFrames: every node starts as its own label, and each round
-  * replaces a node's label with the minimum across its neighbors'
-  * labels; at fixpoint every member carries the component's minimum
-  * doc_id. Each round is one equi-join + one partial-aggregable min —
-  * both AQE-planned shuffles on the id key — and the loop
-  * `localCheckpoint`s per round, which truncates the logical plan
-  * (otherwise iteration k re-analyzes a 2^k-deep lineage) and lets the
-  * next round read materialized partitions instead of recomputing the
-  * chain.
+  * [[connectedComponents]] folds a model-sized edge list with a driver
+  * union-find and a larger one by iterative min-label propagation:
+  * every node starts as its own label, and each round replaces it with
+  * the minimum across its neighbors' labels, so at fixpoint every member
+  * carries the component's minimum doc_id. Each round is one equi-join +
+  * one partial-aggregable min, `localCheckpoint`ed so the next round
+  * reads materialized partitions over a truncated lineage.
   *
-  * Scale shape: rounds = eccentricity of the component's min-id node
-  * (min labels move one hop per round), and near-dup graphs are
-  * clique-dense — a duplicate cluster collides in every band, so its
-  * pair set is near-complete and converges in 2–3 rounds. The
-  * adversarial case (a long CHAIN of pairwise-similar docs) costs
-  * O(diameter) rounds; the known remedy at extreme scale is the
-  * alternating large-star/small-star contraction (O(log n) rounds,
-  * published MapReduce-CC literature), which this API could swap in
-  * without changing its contract. `maxIter` bounds the loop
-  * defensively; the convergence check is one count per round on the
-  * label delta — an action, but over (node, label) metadata only.
+  * Scale shape: rounds = eccentricity of the component's min-id node,
+  * and near-dup graphs are clique-dense (a duplicate cluster collides
+  * in every band), so they converge in 2–3 rounds. A long CHAIN of
+  * pairwise-similar docs costs O(diameter) rounds; for it,
+  * [[connectedComponentsStar]] contracts in O(log n). `maxIter` bounds
+  * the loop, and an exhausted budget throws.
   */
 object DedupClusters {
 
-  /** Runtime-conf key: edge-count ceiling for the LOCAL union-find tier
-    * of [[connectedComponents]] (default 2,000,000 ≈ 32 MB of primitive
-    * edge pairs on the driver — model-artifact-sized, the q272
-    * Gramian / BPE-table / centroid precedent). Graphs over the limit
-    * take the distributed label-propagation loop unchanged. */
-  val LocalEdgeLimitKey = "graft.cc.localEdgeLimit"
+  /** [[connectedComponents]]' [[graft.core.LocalTier]] default:
+    * 2,000,000 edges ≈ 32 MB of edge pairs on the driver. */
+  private val EdgeCap = 2000000
 
   /** Driver-side union-find over a materialized edge array: root = the
     * component's minimum member id (unions always point the larger root
@@ -86,39 +75,36 @@ object DedupClusters {
     * are singletons — callers left-join and coalesce to their own id
     * (see [[assignAll]]).
     *
-    * Two tiers, size-gated at runtime (r14, guide §1.2 "the
-    * distributed algorithm first"): an edge set under
-    * [[LocalEdgeLimitKey]] is a MODEL-SIZED artifact (near-dup pair
-    * graphs are dup-count-sized, orders of magnitude under the corpus)
-    * and solves in one collect + union-find — the measured
-    * alternative was 10 propagation rounds × 2 Spark jobs ≈ 4.7 s on a
-    * 3,451-edge graph (q200 at sf0.1), pure per-round scheduling floor.
-    * Over the limit the original distributed min-label loop runs
-    * unchanged, with the round delta check folded into a join-free
-    * label-sum compare (labels are monotonically non-increasing, so
-    * the exact decimal sum is stable iff no label moved). */
+    * Two tiers, chosen by [[graft.core.LocalTier]]: an edge set under
+    * the cap (near-dup graphs are dup-count-sized) solves in one
+    * collect + union-find — against 10 propagation rounds × 2 jobs ≈
+    * 4.7 s on q200's 3,451-edge graph at sf0.1. Over the cap the
+    * distributed min-label loop runs, its round delta check a join-free
+    * label-sum compare (labels never increase, so the exact decimal sum
+    * is stable iff no label moved). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val edges = pairs
       .select(col("a_id").cast("long").as("u"), col("b_id").cast("long").as("v"))
       .localCheckpoint()
-    val localLimit = spark.conf.getOption(LocalEdgeLimitKey)
-      .map(_.toLong).getOrElse(2000000L)
-    val nEdges = edges.count()
-    if (nEdges <= localLimit) {
-      val labels = unionFindLabels(edges.as[(Long, Long)].collect())
+    graft.core.LocalTier(edges.as[(Long, Long)], EdgeCap) { es =>
+      val labels = unionFindLabels(es)
       graft.core.Pins.releaseCheckpoint(edges)
       // small results return as a LocalRelation (size-known, so
       // downstream joins can broadcast them); larger ones ship as RDD
       // partitions instead of plan-embedded constants
-      return if (labels.length <= 100000)
+      if (labels.length <= 100000)
         spark.createDataset(labels.toSeq).toDF("doc_id", "component")
       else
         spark.createDataset(spark.sparkContext.parallelize(
           labels.toSeq, math.max(1, labels.length / 500000)))
           .toDF("doc_id", "component")
-    }
+    }(propagate(edges, maxIter))
+  }
+
+  /** [[connectedComponents]]' distributed tier over its (u, v) edges. */
+  private def propagate(edges: DataFrame, maxIter: Int): DataFrame = {
     // symmetric closure: propagation must flow both directions
     val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint()

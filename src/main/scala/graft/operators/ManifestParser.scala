@@ -78,9 +78,8 @@ object ManifestParser {
 
   /** Driver-side pure parse with the same drop semantics as [[parse]],
     * for a manifest body the driver already holds: the archive
-    * pipeline's manifest scan and the DSv2 streaming source's offset
-    * planning. Like `regexp_extract`, it takes the first regex match per
-    * line; comments and blanks don't match and drop. */
+    * pipeline's manifest scan. Like `regexp_extract`, it takes the first
+    * regex match per line; comments and blanks don't match and drop. */
   def parseLines(body: String): Seq[ManifestEntry] = {
     val re = RowRegex.r
     body.split("\n", -1).toSeq.flatMap { line =>

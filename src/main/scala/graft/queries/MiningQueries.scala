@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{LocalTier, Tables}
 
 /** Round-7 mining/curation queries (q159–q167, minus the relational
   * q162 which lives with the TPC-H family): the EXACT set-similarity
@@ -26,12 +26,8 @@ object MiningQueries {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
-  /** Runtime-conf key: day-row ceiling for q189's driver-side CUSUM
-    * replay (default 200,000 ≈ 547 years of days — calendar-bounded, so
-    * the gate exists for discipline parity with q142's, not because the
-    * bound is ever near at sane corpora). Over the limit the r14
-    * distributed pin + global-window form runs unchanged. */
-  val CusumLocalDayLimitKey = "graft.cusum.localDayLimit"
+  /** q189's [[LocalTier]] default: 200,000 days ≈ 547 years. */
+  private val CusumDayCap = 200000
 
   /** DuckDB rendering of "first 13 md5 hex digits as an exact value"
     * (the StatQueries.sqlHex52 construction): every digit term and
@@ -1227,26 +1223,41 @@ object MiningQueries {
       .select(to_date(col("ts")).as("day"),
         round(col("value") * 100).cast("long").as("cents"))
       .groupBy(col("day")).agg(sum(col("cents")).as("daily_cents"))
-    // r15 (the q142/q211 driver-replay discipline, conf-gated like
-    // q142): the CUSUM's sequential state rides the DAYS-sized daily
-    // fold — a calendar-bounded model relation at any corpus size — so
-    // ONE corpus job (the fold, via take(limit+1)) collects it and the
-    // median + both prefix/runnning-min passes replay in driver Scala
-    // with identical integer arithmetic: lower median = sorted[(n−1)/2]
-    // (exactly the element_at((size−1)/2+1) selection), Scala Long `/`
-    // = Spark `div` (both truncate toward zero), running min seeded
-    // past the first element = min-over-frame-including-current. The
-    // r14 form spent a pin job + a collect_list median job + a global
-    // window job on the same ≤ days rows. Over the gate the r14
-    // distributed form runs unchanged below. So does a fold holding a
-    // null day (null ts) or null daily_cents (a day of null values):
-    // the replay has no null arithmetic, the window form's sum/min
-    // skip nulls, and MiningSpec pins both tiers equal on such data.
-    val limit = s.conf.getOption(CusumLocalDayLimitKey)
-      .map(_.toInt).getOrElse(200000)
-    val rows = daily.as[(java.sql.Date, java.lang.Long)].take(limit + 1)
-    if (rows.length <= limit && rows.forall(r => r._1 != null && r._2 != null)) {
-      if (rows.isEmpty)
+    // The daily fold is DAYS-sized (calendar-bounded at any corpus
+    // size), so under the [[LocalTier]] cap ONE corpus job collects it
+    // and the median + both prefix/running-min passes replay in driver
+    // Scala with identical integer arithmetic: lower median =
+    // sorted[(n−1)/2] (the element_at((size−1)/2+1) selection), Scala
+    // Long `/` = Spark `div`, running min = min over the frame including
+    // the current row. A null day (null ts) or null daily_cents (a day
+    // of null values) takes the distributed form, whose sum/min skip
+    // nulls; so does a fold over the cap.
+    def distributed: DataFrame = {
+      val dailyP = graft.core.Pins.pin(daily)
+      val med = dailyP
+        .agg(sort_array(collect_list(col("daily_cents"))).as("v"))
+        .select(element_at(col("v"),
+          (((size(col("v")) - 1) / 2) + 1).cast("int")).as("m"))
+      val w = Window.orderBy(col("day"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+      dailyP.crossJoin(broadcast(med))
+        .withColumn("p_hi",
+          sum(col("daily_cents") - col("m") - expr("m div 20")).over(w))
+        .withColumn("p_lo",
+          sum(col("m") - col("daily_cents") - expr("m div 20")).over(w))
+        .withColumn("cusum_hi_cents",
+          col("p_hi") - least(min(col("p_hi")).over(w), lit(0L)))
+        .withColumn("cusum_lo_cents",
+          col("p_lo") - least(min(col("p_lo")).over(w), lit(0L)))
+        .select(col("day"), col("daily_cents"),
+          col("cusum_hi_cents"), col("cusum_lo_cents"),
+          (col("cusum_hi_cents") > expr("m div 2")).cast("long").as("alarm_hi"),
+          (col("cusum_lo_cents") > expr("m div 2")).cast("long").as("alarm_lo"))
+        .orderBy(col("day"))
+    }
+    LocalTier(daily.as[(java.sql.Date, java.lang.Long)], CusumDayCap) { rows =>
+      if (rows.exists(r => r._1 == null || r._2 == null)) distributed
+      else if (rows.isEmpty)
         Seq.empty[(java.sql.Date, Long, Long, Long, Long, Long)]
           .toDF("day", "daily_cents", "cusum_hi_cents", "cusum_lo_cents",
             "alarm_hi", "alarm_lo")
@@ -1271,29 +1282,7 @@ object MiningQueries {
         out.toDF("day", "daily_cents", "cusum_hi_cents", "cusum_lo_cents",
           "alarm_hi", "alarm_lo").orderBy(col("day"))
       }
-    } else {
-      val dailyP = graft.core.Pins.pin(daily)
-      val med = dailyP
-        .agg(sort_array(collect_list(col("daily_cents"))).as("v"))
-        .select(element_at(col("v"),
-          (((size(col("v")) - 1) / 2) + 1).cast("int")).as("m"))
-      val w = Window.orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      dailyP.crossJoin(broadcast(med))
-        .withColumn("p_hi",
-          sum(col("daily_cents") - col("m") - expr("m div 20")).over(w))
-        .withColumn("p_lo",
-          sum(col("m") - col("daily_cents") - expr("m div 20")).over(w))
-        .withColumn("cusum_hi_cents",
-          col("p_hi") - least(min(col("p_hi")).over(w), lit(0L)))
-        .withColumn("cusum_lo_cents",
-          col("p_lo") - least(min(col("p_lo")).over(w), lit(0L)))
-        .select(col("day"), col("daily_cents"),
-          col("cusum_hi_cents"), col("cusum_lo_cents"),
-          (col("cusum_hi_cents") > expr("m div 2")).cast("long").as("alarm_hi"),
-          (col("cusum_lo_cents") > expr("m div 2")).cast("long").as("alarm_lo"))
-        .orderBy(col("day"))
-    }
+    }(distributed)
   }
 
   val q189Sql: String =

@@ -7941,13 +7941,19 @@ object PipelineQueries {
   // the HOF form (aggregate ∘ zip_with) runs two interpreted lambdas
   // per element. [[graft.functions.VectorOps.sqDistLong]] is the native
   // codegen'd kernel, property-tested bit-equal on fixed-dim non-null
-  // arrays (exactly qGrid's shape).
+  // arrays. It truncates ragged arrays and reads a null element as 0,
+  // so kcenterFor's training requires exactly qGrid's fixed shape.
   private def d2To(cx: Seq[Long]): org.apache.spark.sql.Column =
     graft.functions.VectorOps.sqDistLong(col("x"),
       expr(s"array(${cx.mkString("L,")}L)"))
   private[graft] def kcenterFor(s: SparkSession, d: String): Seq[(Long, Long, Seq[Long])] =
     kcenterModels.getOrTrain((s, d, KcK)) {
       val q = qGrid(s, d)
+      val shape = q.agg(countDistinct(size(col("x"))),
+        count(when(col("x").isNull || exists(col("x"), _.isNull), 1))).head()
+      require(shape.getLong(0) == 1L && shape.getLong(1) == 0L,
+        s"q289 needs fixed-dimension embeddings without null elements: " +
+          s"${shape.getLong(0)} distinct lengths, ${shape.getLong(1)} rows with a null")
       val seed = q.orderBy(col("vec_id")).limit(1)
         .collect().head
       var chosen = Vector[(Long, Long, Seq[Long])](

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 
-import graft.core.Tables
+import graft.core.{LocalTier, Tables}
 import graft.functions.TextOps
 
 /** Corpus-STATISTICS queries (q129–q146): the sampling, sketching and
@@ -28,13 +28,8 @@ object StatQueries {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
-  /** Runtime-conf key: transition-row ceiling for q142's driver-side
-    * power-iteration replay (default 100,000 ≈ a 316-state chain; the
-    * matrix is |event_types|² — a DATA property, so it is enforced, not
-    * assumed: the [[graft.operators.DedupClusters.LocalEdgeLimitKey]]
-    * discipline). Matrices over the limit take the r13 distributed
-    * broadcast-join iteration unchanged. */
-  val MarkovLocalTransLimitKey = "graft.markov.localTransLimit"
+  /** q142's [[LocalTier]] default: 100,000 transitions ≈ 316 states. */
+  private val MarkovTransCap = 100000
 
   /** DuckDB rendering of "first 13 md5 hex digits as an exact double"
     * (Spark side: `conv(substring(h,1,13),16,10)` cast to double) — the
@@ -816,31 +811,13 @@ object StatQueries {
       .filter(col("prev").isNotNull)
       .groupBy(col("prev"), col("event_type").as("next"))
       .agg(count(lit(1)).as("n"))
-    // r14 (the q211 driver-replay discipline): the transition matrix is
-    // STATES²-sized (event types — tens of rows at any corpus size), so
-    // the three power iterations replay in driver Scala with the SAME
-    // integer arithmetic ((p·n) div rs per edge, summed by next state)
-    // instead of the r13 chain of a count job + a pin + three
-    // join+fold jobs over a ≤100-row relation. ONE corpus job (the lag
-    // window + fold) remains; only the model-sized matrix crosses the
-    // driver. Oracle (p0→p3 CTE chain) untouched.
-    //
-    // r15 gate (the DedupClusters discipline, round-14 verdict): the
-    // states² bound is a DATA property (event-type cardinality), not a
-    // structural one, so the collect is capped. take(limit+1) is ONE
-    // job: ≤ limit rows back IS the whole matrix; limit+1 rows proves
-    // it's over the gate without collecting the rest, and the r13
-    // distributed iteration below runs unchanged (slower, never
-    // unbounded on the driver).
-    val localLimit = s.conf.getOption(MarkovLocalTransLimitKey)
-      .map(_.toInt).getOrElse(100000)
-    val tp = trans.as[(String, String, Long)].take(localLimit + 1)
-    if (tp.isEmpty) {
-      // no transitions (e.g. one event per user): the oracle's p3 CTE
-      // is empty too — short-circuit instead of dividing 1e6 by zero
-      // states (r14 ADVICE)
-      Seq.empty[(String, Long)].toDF("state", "p_micro")
-    } else if (tp.length <= localLimit) {
+    // The transition matrix is STATES²-sized (tens of rows at any
+    // corpus size), so under the [[LocalTier]] cap the three power
+    // iterations replay in driver Scala with the SAME integer arithmetic
+    // ((p·n) div rs per edge, summed by next state): one corpus job.
+    // No transitions (one event per user) replay to an empty result,
+    // as the oracle's p3 CTE is empty.
+    LocalTier(trans.as[(String, String, Long)], MarkovTransCap) { tp =>
       val rs = tp.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).sum }
       val states = tp.map(_._1).distinct.sorted
       var p: Map[String, Long] =
@@ -854,11 +831,14 @@ object StatQueries {
         }
         p = nx.toMap
       }
-      p.toSeq.sortBy(_._1).toDF("state", "p_micro").orderBy(col("state"))
-    } else {
-      // over-gate fallback: the r13 distributed loop, verbatim — the
-      // matrix stays in the cluster, each iteration is a broadcast
-      // join + fold over the pinned transition relation
+      // a null event_type is a null next state: Spark's ascending sort
+      // puts it first, as in the distributed tier (Scala's
+      // Ordering.String throws on null)
+      p.toSeq.toDF("state", "p_micro").orderBy(col("state"))
+    } {
+      // over the cap: the r13 distributed loop — the matrix stays in the
+      // cluster, each iteration a broadcast join + fold over the pinned
+      // transition relation
       val tpd = graft.core.Pins.pin(
         trans.join(trans.groupBy(col("prev")).agg(sum(col("n")).as("rs")), "prev"))
       val states = tpd.select(col("prev").as("state")).distinct()

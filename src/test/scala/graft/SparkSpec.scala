@@ -13,16 +13,14 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** The session Verify, Bench and perfbench run ([[graft.core.Sessions]]:
+    * GraftExtensions installed, parquet timestamps read as TIMESTAMP), so
+    * specs plan the same queries they do. The warehouse dir goes in as a
+    * `spark.*` system property, which the builder's SparkConf picks up. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    val s = graft.core.Sessions.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

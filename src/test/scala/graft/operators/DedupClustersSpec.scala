@@ -118,36 +118,17 @@ class DedupClustersSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 2L))
   }
 
-  test("distributed tier matches the local union-find tier on random graphs") {
-    // force the distributed min-label loop by zeroing the local-tier
-    // edge budget, and compare against the default (local) path
-    for (seed <- Seq(7, 55)) {
-      val rnd = new scala.util.Random(seed)
-      val n = 50
-      val edges = (0 until 70)
-        .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      val viaLocal = DedupClusters.connectedComponents(edges.toDF("a_id", "b_id"))
-        .as[(Long, Long)].collect().toMap
-      spark.conf.set(DedupClusters.LocalEdgeLimitKey, "0")
-      try {
-        val viaDist = DedupClusters.connectedComponents(edges.toDF("a_id", "b_id"))
-          .as[(Long, Long)].collect().toMap
-        assert(viaDist == viaLocal, s"seed $seed")
-      } finally spark.conf.unset(DedupClusters.LocalEdgeLimitKey)
-    }
-  }
-
   test("exhausted iteration budget throws; star routed via assignAll absorbs the chain") {
     // a 40-node path needs ~39 propagation rounds — maxIter=3 must NOT
     // return silently-split components (those would survive canonical()
     // as bogus extra 'survivors'); the local union-find tier has no
     // iteration budget, so pin the distributed loop for this contract
     val chain = pairsDf((0L until 39L).map(i => (i, i + 1)): _*)
-    spark.conf.set(DedupClusters.LocalEdgeLimitKey, "0")
+    spark.conf.set(graft.core.LocalTier.CapKey, "0")
     val e =
       try intercept[IllegalStateException](
         DedupClusters.connectedComponents(chain, maxIter = 3))
-      finally spark.conf.unset(DedupClusters.LocalEdgeLimitKey)
+      finally spark.conf.unset(graft.core.LocalTier.CapKey)
     assert(e.getMessage.contains("did not converge"))
     // the same chain through assignAll(star = true) converges in
     // O(log n) rounds and labels the whole path with the min id

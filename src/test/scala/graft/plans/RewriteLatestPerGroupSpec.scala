@@ -9,12 +9,12 @@ import scala.util.Random
 class RewriteLatestPerGroupSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRule[T](f: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RewriteLatestPerGroup
+  // the shared session installs the rule (GraftExtensions); baselines
+  // plan without it
+  private def withoutRule[T](f: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", RewriteLatestPerGroup.ruleName)
     try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == RewriteLatestPerGroup)
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   private def rows(seed: Int) = {
@@ -24,47 +24,41 @@ class RewriteLatestPerGroupSpec extends SparkSpec {
 
   test("rn=1 window rewrites to max_by aggregation with identical results") {
     val d = rows(1).toDF("grp", "ts", "id")
-    val q = CurrentPointer.latestWindow(d, Seq(col("grp")), Seq(col("ts"), col("id")))
-    val expected = q.select("grp", "ts", "id").as[(String, Long, Long)].collect().toSet
-    withRule {
-      val o = CurrentPointer.latestWindow(d, Seq(col("grp")), Seq(col("ts"), col("id")))
-      val plan = o.queryExecution.optimizedPlan.toString
-      // the Window node must be gone (Spark's WindowGroupLimit prefilter
-      // may remain below the aggregate — it is a compatible top-1 pushdown)
-      assert(!plan.contains("Window ["), s"window survived:\n$plan")
-      assert(plan.contains("max_by"), s"no max_by in:\n$plan")
-      val got = o.select("grp", "ts", "id").as[(String, Long, Long)].collect().toSet
-      assert(got == expected)
+    val expected = withoutRule {
+      val q = CurrentPointer.latestWindow(d, Seq(col("grp")), Seq(col("ts"), col("id")))
+      val plan = q.queryExecution.optimizedPlan.toString
+      assert(plan.contains("Window ["), s"baseline lost its window:\n$plan")
+      q.select("grp", "ts", "id").as[(String, Long, Long)].collect().toSet
     }
+    val o = CurrentPointer.latestWindow(d, Seq(col("grp")), Seq(col("ts"), col("id")))
+    val plan = o.queryExecution.optimizedPlan.toString
+    // the Window node must be gone (Spark's WindowGroupLimit prefilter
+    // may remain below the aggregate — it is a compatible top-1 pushdown)
+    assert(!plan.contains("Window ["), s"window survived:\n$plan")
+    assert(plan.contains("max_by"), s"no max_by in:\n$plan")
+    val got = o.select("grp", "ts", "id").as[(String, Long, Long)].collect().toSet
+    assert(got == expected)
   }
 
   test("top-k (k>1) and nullable order keys are left untouched") {
-    withRule {
-      val d = rows(2).toDF("grp", "ts", "id")
-      // k = 3: not a latest-per-group — must keep the window
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("grp")).orderBy(col("ts").desc, col("id").desc)
-      val topk = d.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      assert(topk.queryExecution.optimizedPlan.toString.contains("Window"))
-      assert(topk.count() == topk.select("grp", "rn").distinct().count())
+    val d = rows(2).toDF("grp", "ts", "id")
+    // k = 3: not a latest-per-group — must keep the window
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("grp")).orderBy(col("ts").desc, col("id").desc)
+    val topk = d.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+    assert(topk.queryExecution.optimizedPlan.toString.contains("Window"))
+    assert(topk.count() == topk.select("grp", "rn").distinct().count())
 
-      // nullable order key: must keep the window
-      val dn = rows(3).toDF("grp", "ts", "id")
-        .withColumn("ts", when(col("ts") > 5, col("ts")))
-      val latestN = CurrentPointer.latestWindow(dn, Seq(col("grp")), Seq(col("ts")))
-      assert(latestN.queryExecution.optimizedPlan.toString.contains("Window"))
-    }
+    // nullable order key: must keep the window
+    val dn = rows(3).toDF("grp", "ts", "id")
+      .withColumn("ts", when(col("ts") > 5, col("ts")))
+    val latestN = CurrentPointer.latestWindow(dn, Seq(col("grp")), Seq(col("ts")))
+    assert(latestN.queryExecution.optimizedPlan.toString.contains("Window"))
   }
 
   test("graft_dot works as a SQL function") {
-    // the shared test session predates extension wiring, so install the
-    // same builder GraftExtensions injects directly on the registry
-    val s = spark.newSession()
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      args => graft.functions.expressions.ArrayDot(args.head, args(1)),
-      "built-in")
-    val d = s.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
+    // the shared session installs GraftExtensions, as Sessions.local does
+    val d = spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .collect().head.getDouble(0)
     assert(d == 11.0)
   }
@@ -75,71 +69,49 @@ class RewriteLatestPerGroupSpec extends SparkSpec {
   }
 
   test("graft_dot builder casts int arrays instead of crashing") {
-    // same builder GraftExtensions injects (the shared test session
-    // predates extension wiring, so register via the registry)
-    val s = spark.newSession()
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", GraftExtensions.dotBuilder, "built-in")
-    val d = s.sql("SELECT graft_dot(array(1, 2, 3), array(1, 2, 3)) AS d")
+    val d = spark.sql("SELECT graft_dot(array(1, 2, 3), array(1, 2, 3)) AS d")
       .collect().head.getDouble(0)
     assert(d == 14.0)
   }
 
   test("graft_cosine / graft_shingles / graft_edit1 work as SQL functions") {
-    val s = spark.newSession()
-    Seq("graft_cosine" -> GraftExtensions.cosineBuilder,
-        "graft_shingles" -> GraftExtensions.shinglesBuilder,
-        "graft_edit1" -> GraftExtensions.edit1Builder)
-      .foreach { case (n, b) =>
-        s.sessionState.functionRegistry.createOrReplaceTempFunction(n, b, "built-in")
-      }
-    val cos = s.sql("SELECT graft_cosine(array(1, 0), array(1, 0)) AS c")
+    val cos = spark.sql("SELECT graft_cosine(array(1, 0), array(1, 0)) AS c")
       .collect().head.getDouble(0)
     assert(math.abs(cos - 1.0) < 1e-12)
-    val sh = s.sql("SELECT graft_shingles('a b c d', 3) AS s")
+    val sh = spark.sql("SELECT graft_shingles('a b c d', 3) AS s")
       .collect().head.getSeq[String](0)
     assert(sh == Seq("a b c", "b c d"))
-    assert(s.sql("SELECT graft_edit1('kitten', 'mitten') AS e")
+    assert(spark.sql("SELECT graft_edit1('kitten', 'mitten') AS e")
       .collect().head.getBoolean(0))
-    assert(!s.sql("SELECT graft_edit1('kitten', 'kitten') AS e")
+    assert(!spark.sql("SELECT graft_edit1('kitten', 'kitten') AS e")
       .collect().head.getBoolean(0))
     // n is a construction parameter: a non-literal must fail fast
     intercept[Exception] {
-      s.sql("SELECT graft_shingles('a b c', length('xx')) AS s").collect()
+      spark.sql("SELECT graft_shingles('a b c', length('xx')) AS s").collect()
     }
   }
 
   test("graft_sqdist_long / graft_cdc_chunks work as SQL functions") {
-    val s = spark.newSession()
-    Seq("graft_sqdist_long" -> GraftExtensions.sqDistBuilder,
-        "graft_cdc_chunks" -> GraftExtensions.cdcBuilder,
-        "graft_winnow" -> GraftExtensions.winnowBuilder)
-      .foreach { case (n, b) =>
-        s.sessionState.functionRegistry.createOrReplaceTempFunction(n, b, "built-in")
-      }
-    val d = s.sql("SELECT graft_sqdist_long(array(1, 5, 2), array(4, 1, 2)) AS d")
+    val d = spark.sql("SELECT graft_sqdist_long(array(1, 5, 2), array(4, 1, 2)) AS d")
       .collect().head.getLong(0)
     assert(d == 25L) // 9 + 16 + 0, int args widened by the builder cast
-    val ch = s.sql("SELECT graft_cdc_chunks('tiny', 8) AS c")
+    val ch = spark.sql("SELECT graft_cdc_chunks('tiny', 8) AS c")
       .collect().head.getSeq[String](0)
     assert(ch.length == 1 && ch.head.length == 32)
     intercept[Exception] { // w is a construction parameter
-      s.sql("SELECT graft_cdc_chunks('abc', length('xx')) AS c").collect()
+      spark.sql("SELECT graft_cdc_chunks('abc', length('xx')) AS c").collect()
     }
     // graft_winnow: one fingerprint for a single-window doc; 32-hex
-    val fp = s.sql("SELECT graft_winnow('abcdefgh', 5, 4) AS f")
+    val fp = spark.sql("SELECT graft_winnow('abcdefgh', 5, 4) AS f")
       .collect().head.getSeq[String](0)
     assert(fp.nonEmpty && fp.forall(_.length == 32))
     intercept[Exception] {
-      s.sql("SELECT graft_winnow('abcdefgh', 5, length('xxxx')) AS f").collect()
+      spark.sql("SELECT graft_winnow('abcdefgh', 5, length('xxxx')) AS f").collect()
     }
   }
 
   test("graft_redact_pii scrubs from SQL with the DataFrame patterns") {
-    val s = spark.newSession()
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_redact_pii", GraftExtensions.redactBuilder, "built-in")
-    val out = s.sql(
+    val out = spark.sql(
       "SELECT graft_redact_pii('mail a@b.io or call (555)123-4567') AS t")
       .collect().head.getString(0)
     assert(out == "mail [EMAIL] or call [PHONE]", out)

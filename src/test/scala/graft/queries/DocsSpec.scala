@@ -13,6 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class DocsSpec extends AnyFunSuite {
   private def read(p: String) =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+  private lazy val mainSources = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".scala")).toSeq
+    finally walk.close()
+  }
 
   test("every declared query appears in SURVEY.md") {
     val survey = read("SURVEY.md")
@@ -77,11 +82,6 @@ class DocsSpec extends AnyFunSuite {
       re.r.findAllMatchIn(text).map(_.group(1)).toSet
     def uncommented(text: String) =
       text.linesIterator.filterNot(_.trim.startsWith("#")).mkString("\n")
-    val mainSources = {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-      try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".scala")).toSeq
-      finally walk.close()
-    }
     val readByMain = mainSources.flatMap(p => names(read(p), s"""sys\\.env(?:\\.\\w+)?\\(\\s*"($name)"""")).toSet
     val launcher = read("tools/graft-downloader")
     val readByLauncher = names(uncommented(launcher), s"""\\$$\\{($name)""")
@@ -102,5 +102,20 @@ class DocsSpec extends AnyFunSuite {
     }
     val unread = setByDeploy -- readByMain -- readByLauncher -- yamlArgs
     assert(unread.isEmpty, s"set by the deployment but read by nothing: ${unread.toSeq.sorted}")
+  }
+
+  test("README's session settings line lists exactly the graft.* conf keys src/main reads") {
+    val key = """graft\.[A-Za-z]\w*(?:\.[A-Za-z]\w*)+"""
+    val readByMain =
+      mainSources.flatMap(p => s""""($key)"""".r.findAllMatchIn(read(p)).map(_.group(1))).toSet
+    val readme = read("README.md")
+    val at = readme.indexOf("Session settings:")
+    assert(at >= 0, "README has no \"Session settings:\" line")
+    val listed = s"`($key)`".r.findAllMatchIn(readme.substring(at).split("\n\n").head)
+      .map(_.group(1)).toSet
+    assert((readByMain -- listed).isEmpty,
+      s"read by src/main but not in README: ${(readByMain -- listed).toSeq.sorted}")
+    assert((listed -- readByMain).isEmpty,
+      s"in README but read by nothing: ${(listed -- readByMain).toSeq.sorted}")
   }
 }

@@ -47,4 +47,18 @@ class KcenterSpec extends SparkSpec {
     // every point is assigned exactly once
     assert(rows.map(_.getLong(2)).sum == pts.length)
   }
+
+  test("a ragged embedding or a null element makes q289 throw instead of truncating") {
+    import spark.implicits._
+    val fixed = (1L to 12L).map(i => (i, Seq.tabulate(4)(j => Option((i * j % 5).toFloat)), 0))
+    for ((what, bad) <- Seq(
+        "a ragged embedding" -> ((13L, Seq(Option(1f), Option(2f)), 0)),
+        "a null element" -> ((13L, Seq(Option(1f), None, Option(2f), Option(3f)), 0)))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_kcenter").toString
+      (fixed :+ bad).toDF("vec_id", "embedding", "label")
+        .write.parquet(s"$dir/embeddings.parquet")
+      val e = intercept[IllegalArgumentException](PipelineQueries.q289(spark, dir).collect())
+      assert(e.getMessage.contains("fixed-dimension"), what)
+    }
+  }
 }

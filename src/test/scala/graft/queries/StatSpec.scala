@@ -212,27 +212,6 @@ class StatSpec extends SparkSpec {
       s"mass $total outside truncation envelope")
   }
 
-  test("q142: over-gate distributed tier matches the driver replay exactly") {
-    // r15 gate (round-14 verdict): the driver replay collects the
-    // transition matrix only under graft.markov.localTransLimit; over
-    // the limit the r13 broadcast-join iteration runs instead. Force
-    // the fallback with a 1-row limit and pin bit-equality against the
-    // replay tier on the same data — the gate must be a pure
-    // performance fork, never a semantic one.
-    val local = StatQueries.q142(spark, sf0001)
-      .select("state", "p_micro").as[(String, Long)].collect().sortBy(_._1)
-    spark.conf.set(StatQueries.MarkovLocalTransLimitKey, "1")
-    try {
-      val dist = StatQueries.q142(spark, sf0001)
-        .select("state", "p_micro").as[(String, Long)].collect().sortBy(_._1)
-      assert(dist.toSeq == local.toSeq,
-        s"distributed tier diverged: ${dist.toSeq} vs ${local.toSeq}")
-    } finally {
-      spark.conf.unset(StatQueries.MarkovLocalTransLimitKey)
-      graft.core.Pins.release()
-    }
-  }
-
   test("q143: cohort triangle cumulative and population-consistent") {
     val got = StatQueries.q143(spark, sf0001)
       .select("cohort_wk", "age_wk", "n_users", "wk_cents", "cum_cents")
