@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{name:sec,...}}.

@@ -26,7 +26,7 @@ case class LedgerResult(key: Long, n_events: Long, final_balance: Long,
   * the per-key ROW bound is the retention window (documented: a key's
   * history must fit a task; for unbounded histories the streaming twin
   * is `flatMapGroupsWithState`, the
-  * [[graft.streaming.EventStream.startStreakMonitor]] pattern, which
+  * [[graft.streaming.EventStream.streaksLive]] pattern, which
   * carries the same fold incrementally and never re-sorts).
   *
   * Determinism: the fold orders by (tsUs, seq) — a total order — and

@@ -66,7 +66,7 @@ object TiledSelfJoin {
     * Kernels order each emitted pair by id, so output ids satisfy
     * a_id < b_id regardless of block assignment.
     */
-  def apply[T: ClassTag, R: ClassTag](rows: RDD[(Long, T)], blocks: Int)(
+  def apply[T, R: ClassTag](rows: RDD[(Long, T)], blocks: Int)(
       kernel: (Array[(Long, T)], Array[(Long, T)], Boolean) => Iterator[R]): RDD[R] = {
     val b = math.max(1, blocks)
     val numTiles = b * (b + 1) / 2

@@ -29,7 +29,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 object RewriteLatestPerGroup extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond,
+    case Filter(cond,
         Window(Seq(alias @ Alias(
           WindowExpression(_: RowNumber, WindowSpecDefinition(part, order, _)), _)),
         _, _, child, _))

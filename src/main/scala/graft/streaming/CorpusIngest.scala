@@ -41,14 +41,6 @@ import graft.operators.MinHashLsh
   */
 object CorpusIngest {
 
-  /** Signatures of accepted documents so far; empty on first batch. */
-  private def storedSignatures(spark: org.apache.spark.sql.SparkSession,
-                               sigDir: String): Option[DataFrame] =
-    try {
-      val df = spark.read.parquet(sigDir)
-      if (df.columns.contains("doc_id")) Some(df) else None
-    } catch { case _: org.apache.spark.sql.AnalysisException => None }
-
   /** One micro-batch through the three dedup tiers; returns the
     * survivors' signature rows that were appended (for tests /
     * metrics). Exposed separately so batch backfills can reuse the
@@ -90,7 +82,7 @@ object CorpusIngest {
       Seq("doc_id"), "left_anti")
     // tier 3: against the stored corpus
     val sig = sigAll.join(batchKept.select(col("doc_id")), "doc_id")
-    val accepted = storedSignatures(spark, sigDir) match {
+    val accepted = Continuous.readStore(spark, sigDir, "doc_id") match {
       case Some(stored) =>
         // exact vs store (md5 equality) + near-dup vs store. With a
         // band table maintained (the 100 TB steady state), the stored
@@ -152,18 +144,10 @@ object CorpusIngest {
             numHashes: Int = 8, minJaccard: Double = 0.5,
             scrubPii: Boolean = false,
             bandTableName: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the batch's writes happen inside ingestBatch; the returned
-        // checkpoint is this stream's last reference — free it (r14,
-        // the VectorIngest isotropyBatch pattern)
-        graft.core.Pins.releaseCheckpoint(
-          ingestBatch(batch, sigDir, bands, rowsPerBand, shingleN,
-            numHashes, minJaccard, scrubPii, bandTableName))
-      }
-      .start()
+    Continuous.run(docs, checkpointDir, trigger) { (batch, _) =>
+      Some(ingestBatch(batch, sigDir, bands, rowsPerBand, shingleN,
+        numHashes, minJaccard, scrubPii, bandTableName))
+    }
 
   /** One micro-batch of the NOVELTY monitor (q106's continuous twin):
     * per document, the fraction of its distinct word shingles appearing
@@ -193,12 +177,7 @@ object CorpusIngest {
     val batchFirst = sh.withColumn("batch_first",
       min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("sg"))))
-    val stored =
-      try {
-        val df = spark.read.parquet(shDir)
-        if (df.columns.contains("sg")) Some(df) else None
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val flagged = stored match {
+    val flagged = Continuous.readStore(spark, shDir, "sg") match {
       case Some(st) =>
         // fold the store to one row per shingle: a crash-replayed batch
         // appends its (sg, first_doc) pairs a second time, and a bare
@@ -244,13 +223,11 @@ object CorpusIngest {
     * dedup bookkeeping. The store is sources × k hashes — model-sized
     * — and overwrites atomically like the other model artifacts; every
     * q112-style overlap/distinct estimate then reads the store without
-    * touching the corpus. The overwrite rides the Merge two-rename
-    * discipline (write tmp → backup live → swap → drop backup), healed
-    * on entry — a plain `mode(Overwrite)` has a delete-then-write
-    * window that loses the whole sketch history on a crash. */
+    * touching the corpus. The overwrite rides
+    * [[graft.core.Sinks.atomicSwap]], healed on entry — a plain
+    * `mode(Overwrite)` has a delete-then-write window that loses the
+    * whole sketch history on a crash. */
   def kmvBatch(batch: DataFrame, skDir: String, k: Int = 64): DataFrame = {
-    val spark = batch.sparkSession
-    healKmvStore(skDir)
     val bs = batch
       .select(col("source"), md5(concat(lit("kmv|"), col("text"))).as("h"))
       .distinct()
@@ -258,13 +235,8 @@ object CorpusIngest {
       .agg(graft.operators.TopK.minKByString(k)(col("h"), lit(0L)).as("sk"))
       .select(col("source"),
         org.apache.spark.sql.functions.transform(col("sk"), p => p.getField("_1")).as("hs"))
-    val stored =
-      try {
-        val df = spark.read.parquet(skDir)
-        if (df.columns.contains("hs")) Some(df) else None
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
     val emptyArr = array().cast("array<string>")
-    val merged = stored match {
+    val merged = Continuous.readStore(batch.sparkSession, skDir, "hs") match {
       case Some(st) =>
         bs.join(st.select(col("source"), col("hs").as("old")), Seq("source"), "full")
           .select(col("source"),
@@ -274,49 +246,11 @@ object CorpusIngest {
     }
     // materialize BEFORE overwriting the store the lineage reads
     val out = merged.localCheckpoint()
-    val live = new java.io.File(skDir)
-    val tmp = new java.io.File(skDir + ".swap_tmp")
-    val bak = new java.io.File(skDir + ".swap_old")
-    out.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (live.isDirectory)
-      java.nio.file.Files.move(live.toPath, bak.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    java.nio.file.Files.move(tmp.toPath, live.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    if (bak.isDirectory) org.apache.commons.io.FileUtils.deleteDirectory(bak)
+    graft.core.Sinks.atomicSwap(skDir, "sketch") { tmp =>
+      out.write.parquet(tmp)
+    }
     out
   }
-
-  /** Heal a sketch store stranded in the two-rename window: live absent
-    * with the backup present ⇒ the crash hit between the two renames —
-    * restore the backup (it holds every batch before the interrupted
-    * one; KMV idempotence makes the replayed batch converge). A stale
-    * tmp is debris from a crash mid-write — drop it. */
-  private def healKmvStore(skDir: String): Unit = {
-    val live = new java.io.File(skDir)
-    val tmp = new java.io.File(skDir + ".swap_tmp")
-    val bak = new java.io.File(skDir + ".swap_old")
-    if (!live.isDirectory && bak.isDirectory)
-      java.nio.file.Files.move(bak.toPath, live.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    else if (live.isDirectory && bak.isDirectory)
-      org.apache.commons.io.FileUtils.deleteDirectory(bak)
-    if (tmp.isDirectory) org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-  }
-
-  /** The continuous form of [[kmvBatch]]. */
-  def startKmvMaintenance(docs: DataFrame, skDir: String, checkpointDir: String,
-                          trigger: Trigger = Trigger.AvailableNow(),
-                          k: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the swap write happens inside kmvBatch; free the returned
-        // checkpoint (r14 leak sweep)
-        graft.core.Pins.releaseCheckpoint(kmvBatch(batch, skDir, k))
-      }
-      .start()
 
   /** One micro-batch of CHUNK-STORE maintenance (q114's continuous
     * side): each batch document's 8-token chunk hashes land in the
@@ -350,12 +284,7 @@ object CorpusIngest {
         i => md5(concat_ws(" ", slice(col("t"),
           (i - lit(1)) * lit(chunkTokens) + lit(1), lit(chunkTokens)))))).as("h"))
       .localCheckpoint() // pin BEFORE touching the dir the lineage reads
-    val stored =
-      try {
-        val df = spark.read.parquet(chDir)
-        if (df.columns.contains("h")) Some(df) else None
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val newPairs = stored match {
+    val newPairs = Continuous.readStore(spark, chDir, "h") match {
       case Some(st) => ch.join(st.select(col("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
       case None => ch
@@ -382,26 +311,6 @@ object CorpusIngest {
           .otherwise("keep").as("verdict"))
   }
 
-  /** The continuous form of [[chunkBatch]]: per-batch verdicts append
-    * to `outDir`, the chunk-pair store advances in `chDir` — the
-    * at-ingest chunk-duplication gate. */
-  def startChunkGate(docs: DataFrame, chDir: String, outDir: String,
-                     checkpointDir: String,
-                     trigger: Trigger = Trigger.AvailableNow(),
-                     chunkTokens: Int = 8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val verdicts = chunkBatch(batch, chDir, chunkTokens)
-        verdicts.write.mode(SaveMode.Append).parquet(outDir)
-        // frees the batch's chunk-hash checkpoint riding the verdict
-        // lineage (r14 leak sweep — releaseCheckpoint unpersists every
-        // LogicalRDD leaf of the consumed frame)
-        graft.core.Pins.releaseCheckpoint(verdicts)
-      }
-      .start()
-
   /** The continuous form of [[noveltyBatch]]: per-batch novelty rows
     * append to `outDir`, the first-appearance store advances in
     * `shDir`. The content-yield dashboard a crawl ingest watches — a
@@ -411,15 +320,11 @@ object CorpusIngest {
                           checkpointDir: String,
                           trigger: Trigger = Trigger.AvailableNow(),
                           shingleN: Int = 3): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val nov = noveltyBatch(batch, shDir, shingleN)
-        nov.write.mode(SaveMode.Append).parquet(outDir)
-        graft.core.Pins.releaseCheckpoint(nov) // r14 leak sweep
-      }
-      .start()
+    Continuous.run(docs, checkpointDir, trigger) { (batch, _) =>
+      val nov = noveltyBatch(batch, shDir, shingleN)
+      nov.write.mode(SaveMode.Append).parquet(outDir)
+      Some(nov)
+    }
 
   /** One micro-batch of MERKLE-FINGERPRINT maintenance — q267's
     * continuous side, completing the data-versioning story: the batch
@@ -442,51 +347,35 @@ object CorpusIngest {
     * the batch-id transaction rule (the CMS-store pattern, not KMV's
     * free idempotence): merge only when `batchId` EXCEEDS the stored
     * high-water mark; a replayed batch finds its id recorded and skips.
-    * The overwrite rides the crash-safe atomic swap with heal-on-entry.
+    * The overwrite rides the crash-safe atomic swap with heal-on-entry;
+    * the store is corpus-hash-sized, so it keeps the merge's
+    * partitioning instead of funnelling into one file.
     * Corollary: one store per checkpoint lineage. */
-  def merkleBatch(batch: DataFrame, fpDir: String, batchId: Long): DataFrame = {
-    val spark = batch.sparkSession
-    graft.core.Sinks.recoverStrandedBackup(fpDir)
-    val stored =
-      if (new java.io.File(fpDir).isDirectory)
-        Some(spark.read.parquet(fpDir)
-          .select("source", "bucket", "n_docs", "n_chars", "hs", "batch_id"))
-      else None
-    // null-robust (same guard as VectorIngest.isotropyBatch): a
-    // zero-row store makes max(batch_id) NULL — that must read as "no
-    // batches merged", not NPE the monitor into a permanent wedge
-    val storedId = stored
-      .flatMap(df => Option(df.agg(max(col("batch_id"))).head().get(0)))
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
-    if (batchId <= storedId) return spark.read.parquet(fpDir)
-    val inc = batch
-      .select(col("source"), expr("doc_id div 1024").as("bucket"),
-        md5(col("text")).as("h"), col("n_chars"))
-      .groupBy(col("source"), col("bucket"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"),
-        collect_list(col("h")).as("hs"))
-    val emptyArr = array().cast("array<string>")
-    val merged = stored match {
-      case Some(st) =>
-        inc.join(st.select(col("source"), col("bucket"),
-            col("n_docs").as("od"), col("n_chars").as("oc"), col("hs").as("oh")),
-            Seq("source", "bucket"), "full")
-          .select(col("source"), col("bucket"),
-            (coalesce(col("n_docs"), lit(0L)) + coalesce(col("od"), lit(0L))).as("n_docs"),
-            (coalesce(col("n_chars"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("n_chars"),
-            array_sort(concat(coalesce(col("hs"), emptyArr),
-              coalesce(col("oh"), emptyArr))).as("hs"))
-      case None =>
-        inc.select(col("source"), col("bucket"), col("n_docs"),
-          col("n_chars"), array_sort(col("hs")).as("hs"))
+  def merkleBatch(batch: DataFrame, fpDir: String, batchId: Long): Unit =
+    Continuous.mergeBatch(batch.sparkSession, fpDir, "merkle", batchId,
+        Seq("source", "bucket", "n_docs", "n_chars", "hs"), oneFile = false) { stored =>
+      val inc = batch
+        .select(col("source"), expr("doc_id div 1024").as("bucket"),
+          md5(col("text")).as("h"), col("n_chars"))
+        .groupBy(col("source"), col("bucket"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"),
+          collect_list(col("h")).as("hs"))
+      val emptyArr = array().cast("array<string>")
+      stored match {
+        case Some(st) =>
+          inc.join(st.select(col("source"), col("bucket"),
+              col("n_docs").as("od"), col("n_chars").as("oc"), col("hs").as("oh")),
+              Seq("source", "bucket"), "full")
+            .select(col("source"), col("bucket"),
+              (coalesce(col("n_docs"), lit(0L)) + coalesce(col("od"), lit(0L))).as("n_docs"),
+              (coalesce(col("n_chars"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("n_chars"),
+              array_sort(concat(coalesce(col("hs"), emptyArr),
+                coalesce(col("oh"), emptyArr))).as("hs"))
+        case None =>
+          inc.select(col("source"), col("bucket"), col("n_docs"),
+            col("n_chars"), array_sort(col("hs")).as("hs"))
+      }
     }
-    // materialize BEFORE overwriting the store the lineage reads
-    val out = merged.withColumn("batch_id", lit(batchId)).localCheckpoint()
-    graft.core.Sinks.atomicSwap(fpDir, "merkle") { tmp =>
-      out.write.parquet(tmp)
-    }
-    out
-  }
 
   /** Level-2 fold over the stored level-1 rows: per source the Merkle
     * root + dataset-card counts — SAME columns, SAME values as batch
@@ -507,15 +396,10 @@ object CorpusIngest {
                              checkpointDir: String,
                              trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the swap write happens inside merkleBatch; free the returned
-        // checkpoint (r14 leak sweep)
-        graft.core.Pins.releaseCheckpoint(merkleBatch(batch, fpDir, batchId))
-      }
-      .start()
+    Continuous.run(docs, checkpointDir, trigger) { (batch, batchId) =>
+      merkleBatch(batch, fpDir, batchId)
+      None
+    }
 
   /** CONTINUOUS COLUMN-CHECKSUM MAINTENANCE — q293's streaming twin
     * for the documents feed: the store holds one (col_name, n, n_null,
@@ -527,43 +411,19 @@ object CorpusIngest {
     * batch-id transaction rule refuses crash-replays, spec-pinned).
     * This is how a replication target proves column-level integrity
     * continuously instead of re-scanning at audit time. */
-  def checksumBatch(batch: DataFrame, ckDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    graft.core.Sinks.recoverStrandedBackup(ckDir)
-    val stored =
-      if (new java.io.File(ckDir).isDirectory)
-        Some(spark.read.parquet(ckDir)
-          .select("col_name", "n", "n_null", "sum52", "batch_id"))
-      else None
-    // null-robust (same guard as VectorIngest.isotropyBatch): a
-    // zero-row store makes max(batch_id) NULL — that must read as "no
-    // batches merged", not NPE the monitor into a permanent wedge
-    val storedId = stored
-      .flatMap(df => Option(df.agg(max(col("batch_id"))).head().get(0)))
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
-    if (batchId > storedId) {
+  def checksumBatch(batch: DataFrame, ckDir: String, batchId: Long): Unit =
+    Continuous.mergeBatch(batch.sparkSession, ckDir, "sketch", batchId,
+        Seq("col_name", "n", "n_null", "sum52")) { stored =>
       // the SAME melt + fold code the declared q293 runs — the
       // bit-equality contract is structural
       val inc = graft.queries.PipelineQueries.checksumFold(
         graft.queries.PipelineQueries.checksumMelt(batch, "documents",
           graft.queries.PipelineQueries.documentsChecksumCols))
-      val merged = (stored match {
-        case Some(st) => st.select("col_name", "n", "n_null", "sum52")
-          .unionByName(inc)
-        case None => inc
-      }).groupBy(col("col_name"))
+      stored.fold(inc)(_.unionByName(inc))
+        .groupBy(col("col_name"))
         .agg(sum(col("n")).as("n"), sum(col("n_null")).as("n_null"),
           sum(col("sum52")).cast("decimal(38,0)").as("sum52"))
-      // materialize BEFORE overwriting the store the lineage reads
-      val out = merged.localCheckpoint()
-      graft.core.Sinks.atomicSwap(ckDir, "sketch") { tmp =>
-        out.withColumn("batch_id", lit(batchId)).coalesce(1).write.parquet(tmp)
-      }
-      graft.core.Pins.releaseCheckpoint(out)
     }
-    // batchId <= storedId: crash-replay of an already-merged batch —
-    // skip (digest addition would double-count)
-  }
 
   /** q293's documents rows served FROM the [[checksumBatch]] store —
     * same columns, same digests, over everything ingested so far. */
@@ -578,11 +438,8 @@ object CorpusIngest {
                                checkpointDir: String,
                                trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) checksumBatch(batch, ckDir, batchId)
-      }
-      .start()
+    Continuous.run(docs, checkpointDir, trigger) { (batch, batchId) =>
+      checksumBatch(batch, ckDir, batchId)
+      None
+    }
 }

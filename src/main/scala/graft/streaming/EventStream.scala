@@ -86,18 +86,16 @@ case class TwapRow(eventType: String, dayUs: Long, n: Long,
   */
 object EventStream {
 
+  private val HourUs = 3600L * 1000000L
+
   /** Tumbling 1-hour counts/sums per event type — the streaming twin of
     * CoreQueries.q18. With a watermark, state for closed windows is
     * dropped, so state size is O(open windows × event types) regardless
     * of stream length.
     */
   def tumblingCounts(events: DataFrame, watermarkDelay: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), Dsl.sum2(col("value")).as("sum_value"))
-      .select(unix_micros(col("w.start")).as("win_us"), col("event_type"),
-        col("n_events"), col("sum_value"))
+    Continuous.closedWindows(events, "1 hour", watermarkDelay, col("event_type"))(
+      count(lit(1)).as("n_events"), Dsl.sum2(col("value")).as("sum_value"))
 
   /** One batch of the continuous DRIFT monitor (the streaming twin of
     * q68): `closed` carries this trigger's CLOSED windows as
@@ -152,27 +150,13 @@ object EventStream {
                         checkpointDir: String,
                         watermarkDelay: String = "2 hours",
                         onAlarm: (Long, Double) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val hourUs = 3600L * 1000000L
-    events.withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(unix_micros(col("w.start")).as("win_us"), col("event_type"),
-        col("n_events"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val scored = driftPsiBatch(batch, distDir, hourUs)
-        val rows = scored.collect()
-        // frees the batch's closed-window checkpoint riding the scored
-        // lineage (r14 leak sweep — one stranded checkpoint per
-        // micro-batch otherwise)
-        graft.core.Pins.releaseCheckpoint(scored)
-        rows.foreach(r => onAlarm(r.getLong(0), r.getDouble(1)))
-      }
-      .start()
-  }
+      : StreamingQuery =
+    Continuous.run(Continuous.closedWindows(events, "1 hour", watermarkDelay,
+        col("event_type"))(count(lit(1)).as("n_events")), checkpointDir) { (batch, _) =>
+      val scored = driftPsiBatch(batch, distDir, HourUs)
+      scored.collect().foreach(r => onAlarm(r.getLong(0), r.getDouble(1)))
+      Some(scored)
+    }
 
   /** Continuous NUMERIC drift — q86's streaming twin. `value` buckets
     * by the STORED quantile `breakpoints` — a trained ingest artifact
@@ -188,29 +172,20 @@ object EventStream {
                              distDir: String, checkpointDir: String,
                              watermarkDelay: String = "2 hours",
                              onAlarm: (Long, Double) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(breakpoints.nonEmpty, "value drift needs at least one breakpoint")
     require(breakpoints == breakpoints.sorted, "breakpoints must be ascending")
-    val hourUs = 3600L * 1000000L
     val bktNum = breakpoints.foldLeft(lit(0L)) { (acc, b) =>
       acc + (col("value") > lit(b)).cast("long")
     }
-    events.withWatermark("ts", watermarkDelay)
-      .withColumn("bucket", concat(lit("b"), bktNum))
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("bucket"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(unix_micros(col("w.start")).as("win_us"), col("bucket"),
-        col("n_events"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val scored = driftPsiBatch(batch, distDir, hourUs, keyCol = "bucket")
-        val rows = scored.collect()
-        graft.core.Pins.releaseCheckpoint(scored) // r14 leak sweep
-        rows.foreach(r => onAlarm(r.getLong(0), r.getDouble(1)))
-      }
-      .start()
+    val closed = Continuous.closedWindows(
+      events.withColumn("bucket", concat(lit("b"), bktNum)), "1 hour",
+      watermarkDelay, col("bucket"))(count(lit(1)).as("n_events"))
+    Continuous.run(closed, checkpointDir) { (batch, _) =>
+      val scored = driftPsiBatch(batch, distDir, HourUs, keyCol = "bucket")
+      scored.collect().foreach(r => onAlarm(r.getLong(0), r.getDouble(1)))
+      Some(scored)
+    }
   }
 
   /** One batch of the continuous BURST monitor (q113's streaming twin):
@@ -231,22 +206,21 @@ object EventStream {
   def burstBatch(closed: DataFrame, hoursDir: String,
                  minHistory: Int = 12, zThreshold: Double = 3.0): DataFrame = {
     val spark = closed.sparkSession
-    val hourUs = 3600L * 1000000L
     val materialized = closed.select(col("win_us"), col("n_events"))
       .localCheckpoint() // pin BEFORE appending to the dir logic reads
     materialized.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(hoursDir)
     val newWins = materialized.select(col("win_us")).distinct()
     val needed = newWins
       .select(explode(sequence(lit(0), lit(24))).as("k"), col("win_us"))
-      .select((col("win_us") - col("k") * hourUs).as("win_us")).distinct()
+      .select((col("win_us") - col("k") * HourUs).as("win_us")).distinct()
     val store = spark.read.parquet(hoursDir)
       .join(broadcast(needed), Seq("win_us"), "left_semi")
       .groupBy(col("win_us")).agg(max(col("n_events")).as("n"))
     val hist = store.select(col("win_us").as("h_us"), col("n").as("hn"))
     val scored = store.join(newWins, Seq("win_us"), "left_semi")
       .join(hist,
-        col("h_us") >= col("win_us") - lit(24L) * hourUs &&
-          col("h_us") <= col("win_us") - hourUs)
+        col("h_us") >= col("win_us") - lit(24L) * HourUs &&
+          col("h_us") <= col("win_us") - HourUs)
       .groupBy(col("win_us"), col("n"))
       .agg(sum(col("hn")).as("s"), sum(col("hn") * col("hn")).as("ssq"),
         count(lit(1)).as("cnt"))
@@ -278,8 +252,7 @@ object EventStream {
   def seasonalBatch(closed: DataFrame, hoursDir: String,
                     minHistory: Int = 5, zThreshold: Double = 2.0): DataFrame = {
     val spark = closed.sparkSession
-    val hourUs = 3600L * 1000000L
-    def hodOf(c: Column): Column = floor(c / hourUs) % 24
+    def hodOf(c: Column): Column = floor(c / HourUs) % 24
     val materialized = closed.select(col("win_us"), col("n_events"))
       .localCheckpoint()
     materialized.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(hoursDir)
@@ -306,27 +279,6 @@ object EventStream {
       round(z, 4).as("z"),
       (z >= zThreshold).cast("int").as("spike"))
   }
-
-  /** The continuous form of [[seasonalBatch]]. */
-  def startSeasonalMonitor(events: DataFrame, hoursDir: String,
-                           checkpointDir: String,
-                           watermarkDelay: String = "2 hours",
-                           onAlarm: (Long, Double) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(unix_micros(col("w.start")).as("win_us"), col("n_events"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val scored = seasonalBatch(batch, hoursDir)
-        val rows = scored.filter(col("spike") === 1).collect()
-        graft.core.Pins.releaseCheckpoint(scored) // r14 leak sweep
-        rows.foreach(r => onAlarm(r.getLong(0), r.getDouble(4)))
-      }
-      .start()
 
   /** Continuous ACTIVITY-STREAK tracker — q190's streaming twin with
     * TYPED per-user state (the twapDaily discipline): one fixed-width
@@ -600,20 +552,14 @@ object EventStream {
                        checkpointDir: String,
                        watermarkDelay: String = "2 hours",
                        onAlarm: (String, Long, Long) => Unit = (_, _, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.withWatermark("ts", watermarkDelay)
-      .groupBy(col("event_type"), window(col("ts"), "1 day").as("w"))
-      .agg(sum(round(col("value") * 100).cast("long")).as("cents"))
-      .select(col("event_type"), unix_micros(col("w.start")).as("day_us"),
-        col("cents"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ewmaBatch(batch, daysDir).filter(col("alarm") === 1).collect()
-          .foreach(r => onAlarm(r.getString(0), r.getLong(1), r.getLong(2)))
-      }
-      .start()
+      : StreamingQuery =
+    Continuous.run(dailyCents(events, watermarkDelay, col("event_type")),
+        checkpointDir) { (batch, _) =>
+      val scored = ewmaBatch(batch, daysDir)
+      scored.filter(col("alarm") === 1).collect()
+        .foreach(r => onAlarm(r.getString(0), r.getLong(1), r.getLong(2)))
+      Some(scored)
+    }
 
   /** The continuous form of [[cusumBatch]]: watermarked tumbling DAILY
     * revenue in APPEND mode, `onAlarm(day_us, cusum_cents)` per flagged
@@ -625,20 +571,22 @@ object EventStream {
                         targetCents: Long, slackCents: Long, alarmCents: Long,
                         watermarkDelay: String = "2 hours",
                         onAlarm: (Long, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "1 day").as("w"))
-      .agg(sum(round(col("value") * 100).cast("long")).as("cents"))
-      .select(unix_micros(col("w.start")).as("day_us"), col("cents"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        cusumBatch(batch, daysDir, targetCents, slackCents, alarmCents)
-          .filter(col("alarm_hi") === 1 || col("alarm_lo") === 1).collect()
-          .foreach(r => onAlarm(r.getLong(0), math.max(r.getLong(2), r.getLong(3))))
-      }
-      .start()
+      : StreamingQuery =
+    Continuous.run(dailyCents(events, watermarkDelay), checkpointDir) { (batch, _) =>
+      val scored = cusumBatch(batch, daysDir, targetCents, slackCents, alarmCents)
+      scored.filter(col("alarm_hi") === 1 || col("alarm_lo") === 1).collect()
+        .foreach(r => onAlarm(r.getLong(0), math.max(r.getLong(2), r.getLong(3))))
+      Some(scored)
+    }
+
+  /** Watermark-closed UTC days of revenue in integer cents per `keys`:
+    * the `(day_us, keys…, cents)` input of [[cusumBatch]] and
+    * [[ewmaBatch]]. */
+  private def dailyCents(events: DataFrame, watermarkDelay: String,
+                         keys: Column*): DataFrame =
+    Continuous.closedWindows(events, "1 day", watermarkDelay, keys: _*)(
+        sum(round(col("value") * 100).cast("long")).as("cents"))
+      .withColumnRenamed("win_us", "day_us")
 
   /** The continuous form: watermarked tumbling hourly counts in APPEND
     * mode driven through [[burstBatch]], `onAlarm(win_us, z)` fired per
@@ -648,21 +596,14 @@ object EventStream {
                         checkpointDir: String,
                         watermarkDelay: String = "2 hours",
                         onAlarm: (Long, Double) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(unix_micros(col("w.start")).as("win_us"), col("n_events"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val scored = burstBatch(batch, hoursDir)
-        val rows = scored.filter(col("burst") === 1).collect()
-        graft.core.Pins.releaseCheckpoint(scored) // r14 leak sweep
-        rows.foreach(r => onAlarm(r.getLong(0), r.getDouble(3)))
-      }
-      .start()
+      : StreamingQuery =
+    Continuous.run(Continuous.closedWindows(events, "1 hour", watermarkDelay)(
+        count(lit(1)).as("n_events")), checkpointDir) { (batch, _) =>
+      val scored = burstBatch(batch, hoursDir)
+      scored.filter(col("burst") === 1).collect()
+        .foreach(r => onAlarm(r.getLong(0), r.getDouble(3)))
+      Some(scored)
+    }
 
   /** In-stream exact dedup on a key (content hash / event id): the
     * streaming analog of the md5 anti-join — a true duplicate is dropped
@@ -707,14 +648,11 @@ object EventStream {
     * or use a transactional table format for the sink.
     */
   def archiveToParquet(events: DataFrame, outDir: String,
-                       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.core.Sinks.writeDatePartitioned(batch, col("ts"), outDir, mode = "append")
-      }
-      .start()
+                       checkpointDir: String): StreamingQuery =
+    Continuous.run(events, checkpointDir, Trigger.AvailableNow()) { (batch, _) =>
+      graft.core.Sinks.writeDatePartitioned(batch, col("ts"), outDir, mode = "append")
+      None
+    }
 
   /** Per-user session aggregation — ONE definition shared by the batch
     * query (q39's inner relation) and the streaming twin: Spark's
@@ -813,28 +751,23 @@ object EventStream {
   def startUpsertSink(updates: DataFrame, tablePath: String,
                       checkpointDir: String, keys: Seq[String],
                       versionCols: Seq[String])
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(keys.nonEmpty && versionCols.nonEmpty)
-    updates.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(keys.map(col): _*)
-            .orderBy(versionCols.map(col(_).desc): _*)
-          val latest = batch.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-          // versionCols passes through to the table layer: an out-of-
-          // order update arriving in a LATER batch with a lower version
-          // tuple is dropped against the STORED row's version, not just
-          // reduced within its own batch — cross-batch SCD-1 ordering
-          graft.operators.Merge.upsertInto(
-            batch.sparkSession, tablePath, latest, keys,
-            versionCols = versionCols)
-        }
-      }
-      .start()
+    Continuous.run(updates, checkpointDir) { (batch, _) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(keys.map(col): _*)
+        .orderBy(versionCols.map(col(_).desc): _*)
+      val latest = batch.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      // versionCols passes through to the table layer: an out-of-
+      // order update arriving in a LATER batch with a lower version
+      // tuple is dropped against the STORED row's version, not just
+      // reduced within its own batch — cross-batch SCD-1 ordering
+      graft.operators.Merge.upsertInto(
+        batch.sparkSession, tablePath, latest, keys,
+        versionCols = versionCols)
+      None
+    }
   }
 
   /** Continuous heavy hitters — q79's streaming twin: each micro-batch
@@ -861,46 +794,31 @@ object EventStream {
                                sketchDir: String, checkpointDir: String,
                                capacity: Int = 64,
                                onUpdate: Seq[(String, Long)] => Unit = _ => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    updates.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.core.Sinks.recoverStrandedBackup(sketchDir)
-          val (storedId, stored) =
-            if (new java.io.File(sketchDir).isDirectory) {
-              val df = spark.read.parquet(sketchDir)
-                .select("item", "est", "batch_id").collect()
-              (df.headOption.map(_.getLong(2)).getOrElse(-1L),
-                df.toSeq.map(r => (r.getString(0), r.getLong(1))))
-            } else (-1L, Seq.empty[(String, Long)])
-          if (batchId > storedId) {
-            val bs = batch
-              .agg(graft.operators.FrequentItems.sketch(capacity)(col(termCol))
-                .as("hh"))
-              .head().getSeq[org.apache.spark.sql.Row](0)
-              .map(r => (r.getString(0), r.getLong(1)))
-            val merged = graft.operators.FrequentItems
-              .mergeSketches(stored, bs, capacity)
-            graft.core.Sinks.atomicSwap(sketchDir, "sketch") { tmp =>
-              import spark.implicits._
-              merged.toDF("item", "est")
-                .withColumn("batch_id", lit(batchId))
-                .coalesce(1).write.parquet(tmp)
-            }
-            onUpdate(merged)
-          } else if (batchId == storedId) {
-            // replay of the batch whose merge already committed: don't
-            // re-merge (double-count), but don't drop the notification a
-            // pre-callback crash may have lost — at-least-once delivery
-            onUpdate(stored.sortBy { case (t, n) => (-n, t) })
-          }
-        }
+      : StreamingQuery =
+    Continuous.run(updates, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      def pairs(df: DataFrame) = df.select("item", "est").as[(String, Long)].collect().toSeq
+      var merged = Seq.empty[(String, Long)]
+      Continuous.mergeBatch(spark, sketchDir, "sketch", batchId, Seq("item", "est")) { stored =>
+        val bs = batch
+          .agg(graft.operators.FrequentItems.sketch(capacity)(col(termCol)).as("hh"))
+          .head().getSeq[org.apache.spark.sql.Row](0)
+          .map(r => (r.getString(0), r.getLong(1)))
+        merged = graft.operators.FrequentItems
+          .mergeSketches(stored.fold(Seq.empty[(String, Long)])(pairs), bs, capacity)
+        merged.toDF("item", "est")
+      } match {
+        case Continuous.Merged => onUpdate(merged)
+        // replay of the batch whose merge already committed: don't
+        // re-merge (double-count), but don't drop the notification a
+        // pre-callback crash may have lost — at-least-once delivery
+        case Continuous.Replayed =>
+          onUpdate(pairs(spark.read.parquet(sketchDir)).sortBy { case (t, n) => (-n, t) })
+        case Continuous.Stale => ()
       }
-      .start()
-  }
+      None
+    }
 
   /** Continuous count-min maintenance — q130's streaming twin, and the
     * DISTRIBUTED member of the sketch-twin family: where the
@@ -924,43 +842,17 @@ object EventStream {
   def startCountMinMonitor(updates: DataFrame, itemCol: String,
                            sketchDir: String, checkpointDir: String,
                            d: Int = 4)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    updates.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.core.Sinks.recoverStrandedBackup(sketchDir)
-          val stored =
-            if (new java.io.File(sketchDir).isDirectory)
-              Some(spark.read.parquet(sketchDir).select("j", "b", "c", "batch_id"))
-            else None
-          val storedId = stored
-            .map(_.agg(max(col("batch_id"))).head().getLong(0))
-            .getOrElse(-1L)
-          if (batchId > storedId) {
-            val bs = graft.operators.CountMin.cells(
-              batch.select(col(itemCol)), itemCol, d)
-            val merged = stored match {
-              case Some(st) => graft.operators.CountMin.merge(st.select("j", "b", "c"), bs)
-              case None => bs
-            }
-            // materialize BEFORE overwriting the store the lineage reads
-            val out = merged.localCheckpoint()
-            graft.core.Sinks.atomicSwap(sketchDir, "sketch") { tmp =>
-              out.withColumn("batch_id", lit(batchId))
-                .coalesce(1).write.parquet(tmp)
-            }
-            graft.core.Pins.releaseCheckpoint(out)
-          }
-          // batchId <= storedId: crash-replay of an already-merged
-          // batch — skip (cell addition would double-count). Consumers
-          // read the store, so there is no notification to re-deliver.
-        }
+      : StreamingQuery =
+    Continuous.run(updates, checkpointDir) { (batch, batchId) =>
+      // a replayed batch id is skipped (cell addition would double-
+      // count); consumers read the store, so nothing is re-delivered
+      Continuous.mergeBatch(batch.sparkSession, sketchDir, "sketch", batchId,
+          Seq("j", "b", "c")) { stored =>
+        val bs = graft.operators.CountMin.cells(batch.select(col(itemCol)), itemCol, d)
+        stored.fold(bs)(graft.operators.CountMin.merge(_, bs))
       }
-      .start()
-  }
+      None
+    }
 
   /** Continuous FK-ORPHAN monitor — q256's streaming twin for one
     * declared edge (the governance shelf's audit-as-you-ingest story):
@@ -981,53 +873,27 @@ object EventStream {
   def startFkOrphanMonitor(updates: DataFrame, keyCol: String,
                            parentKeys: DataFrame, storeDir: String,
                            checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    updates.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.core.Sinks.recoverStrandedBackup(storeDir)
-          val stored =
-            if (new java.io.File(storeDir).isDirectory)
-              Some(spark.read.parquet(storeDir)
-                .select("tot", "k", "cnt", "batch_id"))
-            else None
-          val storedId = stored
-            .map(_.agg(max(col("batch_id"))).head().getLong(0))
-            .getOrElse(-1L)
-          if (batchId > storedId) {
-            val pkCol = parentKeys.columns.head
-            val pks = parentKeys
-              .select(col(pkCol).cast("long").as("pk")).distinct()
-            val child = batch.select(col(keyCol).cast("long").as("k"))
-            val totals = child.agg(count(lit(1)).as("cnt"))
-              .select(lit(true).as("tot"), lit(null).cast("long").as("k"),
-                col("cnt"))
-            val orphans = child
-              .join(broadcast(pks), col("k") === col("pk"), "left_anti")
-              .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
-              .select(lit(false).as("tot"), col("k"), col("cnt"))
-            val bs = totals.unionByName(orphans)
-            val merged = (stored match {
-              case Some(st) => st.select("tot", "k", "cnt").unionByName(bs)
-              case None => bs
-            }).groupBy(col("tot"), col("k")).agg(sum(col("cnt")).as("cnt"))
-            // materialize BEFORE overwriting the store the lineage reads
-            val out = merged.localCheckpoint()
-            graft.core.Sinks.atomicSwap(storeDir, "orphans") { tmp =>
-              out.withColumn("batch_id", lit(batchId))
-                .coalesce(1).write.parquet(tmp)
-            }
-            graft.core.Pins.releaseCheckpoint(out)
-          }
-          // batchId <= storedId: crash-replay of an already-merged
-          // batch — skip (count addition would double-count)
-        }
+      : StreamingQuery =
+    Continuous.run(updates, checkpointDir) { (batch, batchId) =>
+      Continuous.mergeBatch(batch.sparkSession, storeDir, "orphans", batchId,
+          Seq("tot", "k", "cnt")) { stored =>
+        val pkCol = parentKeys.columns.head
+        val pks = parentKeys
+          .select(col(pkCol).cast("long").as("pk")).distinct()
+        val child = batch.select(col(keyCol).cast("long").as("k"))
+        val totals = child.agg(count(lit(1)).as("cnt"))
+          .select(lit(true).as("tot"), lit(null).cast("long").as("k"),
+            col("cnt"))
+        val orphans = child
+          .join(broadcast(pks), col("k") === col("pk"), "left_anti")
+          .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
+          .select(lit(false).as("tot"), col("k"), col("cnt"))
+        val bs = totals.unionByName(orphans)
+        stored.fold(bs)(_.unionByName(bs))
+          .groupBy(col("tot"), col("k")).agg(sum(col("cnt")).as("cnt"))
       }
-      .start()
-  }
+      None
+    }
 
   /** CONTINUOUS SRM monitor — q281's streaming twin: the store holds
     * the distinct (event_type, user_id) pairs seen so far, each batch
@@ -1052,38 +918,27 @@ object EventStream {
   def startSrmMonitor(events: DataFrame, storeDir: String,
                       checkpointDir: String,
                       onBreach: Seq[String] => Unit = _ => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.core.Sinks.recoverStrandedBackup(storeDir)
-          val bs = batch
-            .select(col("event_type").cast("string").as("event_type"),
-              col("user_id").cast("long").as("user_id"))
-            .distinct()
-          val merged =
-            if (new java.io.File(storeDir).isDirectory)
-              spark.read.parquet(storeDir).unionByName(bs).distinct()
-            else bs
-          // materialize BEFORE overwriting the store the lineage reads
-          val out = merged.localCheckpoint()
-          graft.core.Sinks.atomicSwap(storeDir, "srm") { tmp =>
-            out.coalesce(1).write.parquet(tmp)
-          }
-          // breach check folds the already-materialized frame — no
-          // second read of the just-written store per batch
-          val breached = graft.queries.PipelineQueries.srmFold(out)
-            .filter(col("srm_flag") === 1L)
-            .select(col("event_type")).collect().map(_.getString(0)).toSeq
-          graft.core.Pins.releaseCheckpoint(out)
-          if (breached.nonEmpty) onBreach(breached)
-        }
+      : StreamingQuery =
+    Continuous.run(events, checkpointDir) { (batch, _) =>
+      val bs = batch
+        .select(col("event_type").cast("string").as("event_type"),
+          col("user_id").cast("long").as("user_id"))
+        .distinct()
+      val merged = Continuous.readStore(batch.sparkSession, storeDir, "user_id")
+        .fold(bs)(_.unionByName(bs).distinct())
+      // materialize BEFORE overwriting the store the lineage reads
+      val out = merged.localCheckpoint()
+      graft.core.Sinks.atomicSwap(storeDir, "srm") { tmp =>
+        out.coalesce(1).write.parquet(tmp)
       }
-      .start()
-  }
+      // breach check folds the already-materialized frame — no
+      // second read of the just-written store per batch
+      val breached = graft.queries.PipelineQueries.srmFold(out)
+        .filter(col("srm_flag") === 1L)
+        .select(col("event_type")).collect().map(_.getString(0)).toSeq
+      if (breached.nonEmpty) onBreach(breached)
+      Some(out)
+    }
 
   /** q281's audit rows served FROM the [[startSrmMonitor]] pair store —
     * the same arm counts, imbalance ppm, χ² milli-units, and breach
@@ -1125,8 +980,6 @@ object EventStream {
     * query / the CMS family's transaction rule). */
   def quantileSampleBatch(batch: DataFrame, skDir: String,
                           k: Int = 256): DataFrame = {
-    val spark = batch.sparkSession
-    graft.core.Sinks.recoverStrandedBackup(skDir)
     val arrT = "array<struct<h:string,cents:bigint>>"
     val bs = batch
       .select(col("event_type"),
@@ -1136,12 +989,7 @@ object EventStream {
       .agg(graft.operators.TopK.minKByString(k)(col("h"), col("cents")).as("sk"))
       .select(col("event_type"),
         expr("transform(sk, p -> struct(p._1 AS h, p._2 AS cents))").as("smp"))
-    val stored =
-      try {
-        val df = spark.read.parquet(skDir)
-        if (df.columns.contains("smp")) Some(df) else None
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val merged = stored match {
+    val merged = Continuous.readStore(batch.sparkSession, skDir, "smp") match {
       case Some(st) =>
         bs.join(st.select(col("event_type"), col("smp").as("old")),
             Seq("event_type"), "full")
@@ -1170,21 +1018,6 @@ object EventStream {
     graft.core.Pins.releaseCheckpoint(out)
     q
   }
-
-  /** The continuous form of [[quantileSampleBatch]]: per-batch
-    * maintenance of the bottom-k sample store at `skDir`. */
-  def startQuantileSampleMonitor(events: DataFrame, skDir: String,
-                                 checkpointDir: String, k: Int = 256,
-                                 trigger: Trigger = Trigger.AvailableNow(),
-                                 onUpdate: DataFrame => Unit = _ => ())
-      : StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) onUpdate(quantileSampleBatch(batch, skDir, k))
-      }
-      .start()
 
   /** Continuous funnel monitor — the streaming twin of q87: per-user
     * ordered view → click → purchase stage times as typed state, an
@@ -1434,21 +1267,6 @@ object EventStream {
       .select(outCols.map(col): _*)
   }
 
-  /** Continuous wiring: maintain the profile stores from an events
-    * stream; `foreachBatch` hands the batch id the replay rule keys
-    * on. The snapshot is served on demand from the stores, not from
-    * the stream. */
-  def startProfileMaintainer(events: DataFrame, profDir: String,
-                             checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        profileBatch(batch, batchId, profDir)
-      }
-      .start()
-
   /** Continuous SCHEMA-DRIFT monitor — q274's streaming twin: the batch
     * profiler reads a snapshot; this watches a semi-structured feed AS
     * IT ARRIVES and alerts the moment a key's type set grows (the int
@@ -1469,59 +1287,34 @@ object EventStream {
   def startSchemaDriftMonitor(updates: DataFrame, jsonCol: String,
                               storeDir: String, checkpointDir: String,
                               onDrift: Seq[String] => Unit = _ => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    def drifted(spark: org.apache.spark.sql.SparkSession): Seq[String] =
-      spark.read.parquet(storeDir)
-        .groupBy(col("key"))
-        .agg(countDistinct(col("ty")).as("nty"))
-        .filter(col("nty") > 1)
-        .select("key").collect().map(_.getString(0)).toSeq.sorted
-    updates.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.core.Sinks.recoverStrandedBackup(storeDir)
-          val stored =
-            if (new java.io.File(storeDir).isDirectory)
-              Some(spark.read.parquet(storeDir).select("key", "ty", "n", "batch_id"))
-            else None
-          val storedId = stored
-            .map(_.agg(max(col("batch_id"))).head().getLong(0))
-            .getOrElse(-1L)
-          if (batchId > storedId) {
-            val bs = batch
-              .select(graft.functions.JsonOps.keyValues(col(jsonCol))
-                .as(Seq("key", "v")))
-              .select(col("key"),
-                graft.functions.JsonOps.typeClass(col("v")).as("ty"))
-              .groupBy(col("key"), col("ty"))
-              .agg(count(lit(1)).as("n"))
-            val merged = stored match {
-              case Some(st) =>
-                bs.join(st.select(col("key"), col("ty"), col("n").as("o")),
-                    Seq("key", "ty"), "full")
-                  .select(col("key"), col("ty"),
-                    (coalesce(col("n"), lit(0L)) + coalesce(col("o"), lit(0L)))
-                      .as("n"))
-              case None => bs
-            }
-            // materialize BEFORE overwriting the store the lineage reads
-            val out = merged.localCheckpoint()
-            graft.core.Sinks.atomicSwap(storeDir, "sketch") { tmp =>
-              out.withColumn("batch_id", lit(batchId))
-                .coalesce(1).write.parquet(tmp)
-            }
-            graft.core.Pins.releaseCheckpoint(out)
-            onDrift(drifted(spark))
-          } else if (batchId == storedId) {
-            // replay of a committed batch: don't double-count, but don't
-            // drop a notification a pre-callback crash may have lost
-            onDrift(drifted(spark))
-          }
-        }
+      : StreamingQuery =
+    Continuous.run(updates, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      Continuous.mergeBatch(spark, storeDir, "sketch", batchId,
+          Seq("key", "ty", "n")) { stored =>
+        val bs = batch
+          .select(graft.functions.JsonOps.keyValues(col(jsonCol))
+            .as(Seq("key", "v")))
+          .select(col("key"),
+            graft.functions.JsonOps.typeClass(col("v")).as("ty"))
+          .groupBy(col("key"), col("ty"))
+          .agg(count(lit(1)).as("n"))
+        stored.fold(bs)(st =>
+          bs.join(st.select(col("key"), col("ty"), col("n").as("o")),
+              Seq("key", "ty"), "full")
+            .select(col("key"), col("ty"),
+              (coalesce(col("n"), lit(0L)) + coalesce(col("o"), lit(0L))).as("n")))
+      } match {
+        // a replay of a committed batch doesn't double-count, but
+        // re-delivers a notification a pre-callback crash may have lost
+        case Continuous.Merged | Continuous.Replayed =>
+          onDrift(spark.read.parquet(storeDir)
+            .groupBy(col("key"))
+            .agg(countDistinct(col("ty")).as("nty"))
+            .filter(col("nty") > 1)
+            .select("key").collect().map(_.getString(0)).toSeq.sorted)
+        case Continuous.Stale => ()
       }
-      .start()
-  }
+      None
+    }
 }

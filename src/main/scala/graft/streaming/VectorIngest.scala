@@ -32,14 +32,6 @@ import graft.functions.{Pq, VectorOps}
   */
 object VectorIngest {
 
-  /** vec_ids already in the store; None before the first append. */
-  private def storedIds(spark: org.apache.spark.sql.SparkSession,
-                        codesDir: String): Option[DataFrame] =
-    try {
-      val df = spark.read.parquet(codesDir)
-      if (df.columns.contains("vec_id")) Some(df.select(col("vec_id"))) else None
-    } catch { case _: org.apache.spark.sql.AnalysisException => None }
-
   /** One micro-batch: assign + encode against the frozen models, drop
     * already-stored ids, append. Returns the appended rows (for tests /
     * metrics). Exposed separately so batch backfills share the exact
@@ -47,12 +39,11 @@ object VectorIngest {
   def ingestBatch(batch: DataFrame, ivf: VectorOps.IvfModel, pq: Pq.PqModel,
                   codesDir: String,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = batch.sparkSession
     val rows = VectorOps.assignTo(batch, idCol, vecCol, ivf)
       .select(col(idCol).as("vec_id"), col("cell"),
         Pq.codesColumn(col("__v"), pq).as("codes"))
-    val fresh = storedIds(spark, codesDir) match {
-      case Some(st) => rows.join(st, Seq("vec_id"), "left_anti")
+    val fresh = Continuous.readStore(batch.sparkSession, codesDir, "vec_id") match {
+      case Some(st) => rows.join(st.select(col("vec_id")), Seq("vec_id"), "left_anti")
       case None => rows
     }
     // materialize BEFORE appending to the directory the anti-join reads
@@ -76,45 +67,24 @@ object VectorIngest {
     * than at the next offline audit. */
   def isotropyBatch(batch: DataFrame, statsDir: String, batchId: Long,
                     vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    graft.core.Sinks.recoverStrandedBackup(statsDir)
-    val stored =
-      if (new java.io.File(statsDir).isDirectory)
-        Some(spark.read.parquet(statsDir))
-      else None
-    // null-robust: an (unexpected) zero-row store must read as "no
-    // batches merged", not NPE the monitor into a permanent wedge
-    val storedId = stored
-      .flatMap(df => Option(df.agg(max(col("batch_id"))).head().get(0)))
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
-    if (batchId > storedId) {
-      val bs = batch
-        .select(expr(s"transform($vecCol, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))")
-          .as("qv"))
-        .select(posexplode(col("qv")).as(Seq("j", "q")))
-        .groupBy(col("j"))
-        .agg(sum(col("q")).as("sj"), sum(col("q") * col("q")).as("qj"),
-          count(lit(1)).as("n"))
-      // a batch of NULL/empty vectors folds to ZERO rows — writing
-      // that store would strand every later batch; skip the merge (the
-      // batch contributes no moments, so skipping IS the correct sum)
-      if (!bs.isEmpty) {
-        val merged = (stored match {
-          case Some(st) => st.select("j", "sj", "qj", "n").unionByName(bs)
-          case None => bs
-        }).groupBy(col("j"))
+    val bs = batch
+      .select(expr(s"transform($vecCol, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))")
+        .as("qv"))
+      .select(posexplode(col("qv")).as(Seq("j", "q")))
+      .groupBy(col("j"))
+      .agg(sum(col("q")).as("sj"), sum(col("q") * col("q")).as("qj"),
+        count(lit(1)).as("n"))
+    // a batch of NULL/empty vectors folds to ZERO rows and contributes
+    // no moments: skipping it IS the correct sum, and keeps the store
+    // from ever holding zero rows (the audit reads one spectrum row)
+    if (!bs.isEmpty)
+      Continuous.mergeBatch(batch.sparkSession, statsDir, "sketch", batchId,
+          Seq("j", "sj", "qj", "n")) { stored =>
+        stored.fold(bs)(_.unionByName(bs))
+          .groupBy(col("j"))
           .agg(sum(col("sj")).as("sj"), sum(col("qj")).as("qj"),
             sum(col("n")).as("n"))
-        // materialize BEFORE overwriting the store the lineage reads
-        val out = merged.localCheckpoint()
-        graft.core.Sinks.atomicSwap(statsDir, "sketch") { tmp =>
-          out.withColumn("batch_id", lit(batchId)).coalesce(1).write.parquet(tmp)
-        }
-        graft.core.Pins.releaseCheckpoint(out)
       }
-    }
-    // batchId <= storedId: crash-replay of an already-merged batch —
-    // skip (moment addition would double-count)
   }
 
   /** q282's audit row served FROM the [[isotropyBatch]] moment store —
@@ -134,24 +104,20 @@ object VectorIngest {
                            prCentiFloor: Long = 200L,
                            onCollapse: Long => Unit = _ => ())
       : StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          isotropyBatch(batch, statsDir, batchId)
-          // pr_centi is NULL while the store has zero variance (one
-          // vector, or all identical) — that's "no spectrum yet", not
-          // a collapse page, and must not NPE the query into a
-          // crash-replay wedge
-          if (new java.io.File(statsDir).isDirectory) {
-            val row = isotropyAudit(batch.sparkSession, statsDir)
-              .select(col("pr_centi")).head()
-            if (!row.isNullAt(0) && row.getLong(0) < prCentiFloor)
-              onCollapse(row.getLong(0))
-          }
-        }
+    Continuous.run(vecs, checkpointDir) { (batch, batchId) =>
+      isotropyBatch(batch, statsDir, batchId)
+      // pr_centi is NULL while the store has zero variance (one
+      // vector, or all identical) — that's "no spectrum yet", not
+      // a collapse page, and must not NPE the query into a
+      // crash-replay wedge
+      if (new java.io.File(statsDir).isDirectory) {
+        val row = isotropyAudit(batch.sparkSession, statsDir)
+          .select(col("pr_centi")).head()
+        if (!row.isNullAt(0) && row.getLong(0) < prCentiFloor)
+          onCollapse(row.getLong(0))
       }
-      .start()
+      None
+    }
 
   /** One micro-batch of INCREMENTAL SEMANTIC DEDUP — q303's streaming
     * twin (the q55 vs-store discipline): the store at `memberDir`
@@ -184,15 +150,9 @@ object VectorIngest {
   def semanticDedupBatch(batch: DataFrame, memberDir: String,
                          tau2Num: Long, tau2Den: Long,
                          maxTaskMembers: Int = 4096): DataFrame = {
-    val spark = batch.sparkSession
     val rows = batch.select(col("cell"), col("vec_id"), col("q"))
-    val stored: Option[DataFrame] =
-      try {
-        val df = spark.read.parquet(memberDir)
-        if (df.columns.contains("vec_id"))
-          Some(df.select(col("cell"), col("vec_id"), col("q")))
-        else None
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val stored = Continuous.readStore(batch.sparkSession, memberDir, "vec_id")
+      .map(_.select(col("cell"), col("vec_id"), col("q")))
     val fresh = (stored match {
       case Some(st) =>
         rows.join(st.select(col("vec_id")), Seq("vec_id"), "left_anti")
@@ -229,23 +189,18 @@ object VectorIngest {
                          maxTaskMembers: Int = 4096,
                          trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          semanticDedupBatch(batch, memberDir, tau2Num, tau2Den,
-            maxTaskMembers)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode(SaveMode.Append).parquet(statsDir): Unit
-          // the batch fully consumed its fold pin (stats are
-          // checkpointed, members appended) — free it so an unbounded
-          // stream doesn't strand a block per micro-batch (the Pins
-          // one-driver protocol: this stream owns its session)
-          graft.core.Pins.release()
-        }
-      }
-      .start()
+    Continuous.run(vecs, checkpointDir, trigger) { (batch, batchId) =>
+      semanticDedupBatch(batch, memberDir, tau2Num, tau2Den,
+        maxTaskMembers)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode(SaveMode.Append).parquet(statsDir)
+      // the batch fully consumed its fold pin (stats are
+      // checkpointed, members appended) — free it so an unbounded
+      // stream doesn't strand a block per micro-batch (the Pins
+      // one-driver protocol: this stream owns its session)
+      graft.core.Pins.release()
+      None
+    }
 
   /** The continuous form: a streaming (vec_id, embedding) source driven
     * through [[ingestBatch]] per micro-batch. */
@@ -253,11 +208,7 @@ object VectorIngest {
             codesDir: String, checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow(),
             idCol: String = "vec_id", vecCol: String = "embedding"): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch, ivf, pq, codesDir, idCol, vecCol): Unit
-      }
-      .start()
+    Continuous.run(vecs, checkpointDir, trigger) { (batch, _) =>
+      Some(ingestBatch(batch, ivf, pq, codesDir, idCol, vecCol))
+    }
 }

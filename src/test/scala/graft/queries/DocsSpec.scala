@@ -55,6 +55,32 @@ class DocsSpec extends AnyFunSuite {
       s"streaming twins missing from SURVEY.md §2.5: $missing")
   }
 
+  test("every SURVEY.md §2.5 row names a live streaming def and an existing spec file") {
+    // the other direction of the ratchet above: a deleted or renamed
+    // twin, or a spec that moved, leaves a stale row behind
+    val survey = read("SURVEY.md")
+    val from = survey.indexOf("### 2.5 ")
+    assert(from >= 0, "SURVEY.md has no §2.5")
+    val lines = survey.substring(from, survey.indexOf("\n## ", from)).linesIterator
+      .filter(_.startsWith("| `")).toSeq
+    val row = """^\| `(\w+)\.(\w+)` \|.*\| `(\w+Spec)` \|$""".r
+    val unparsed = lines.filter(row.findFirstIn(_).isEmpty)
+    assert(unparsed.isEmpty, s"§2.5 rows not of the form | `Object.def` | … | `SomeSpec` |: $unparsed")
+    val specs = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/test"))
+      try walk.iterator().asScala.map(_.getFileName.toString).toSet
+      finally walk.close()
+    }
+    val stale = lines.flatMap(row.findFirstMatchIn).flatMap { m =>
+      val (obj, name, spec) = (m.group(1), m.group(2), m.group(3))
+      val src = new java.io.File(s"src/main/scala/graft/streaming/$obj.scala")
+      val live = src.isFile && s"def $name\\s*[(\\[]".r.findFirstIn(read(src.getPath)).isDefined
+      Option.when(!live)(s"$obj.$name is no def in graft.streaming") ++
+        Option.when(!specs(s"$spec.scala"))(s"$spec.scala does not exist")
+    }
+    assert(stale.isEmpty, s"stale SURVEY.md §2.5 rows: $stale")
+  }
+
   test("every SPEED.md row is a declared query") {
     val declared = graft.SparkEntry.queries.keySet
     val rows = read("SPEED.md").linesIterator

@@ -85,8 +85,8 @@ class NoveltyMonitorSpec extends SparkSpec {
       "re-merging an already-merged batch changed the sketch")
     // crash INSIDE the two-rename window (backup present, live absent):
     // the next batch heals the store and converges to the same sketch
-    java.nio.file.Files.move(new java.io.File(skDir).toPath,
-      new java.io.File(skDir + ".swap_old").toPath,
+    val live = new java.io.File(skDir).toPath
+    java.nio.file.Files.move(live, live.resolveSibling(".sk.sketch_old"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     CorpusIngest.kmvBatch(b2, skDir)
     assert(sketches(spark.read.parquet(skDir)) == batchBuilt,

@@ -58,6 +58,16 @@ class SchemaDriftMonitorSpec extends SparkSpec {
     assert(alerts.last == Seq("k"), s"got ${alerts.last}")
   }
 
+  test("a first batch whose JSON yields no key does not wedge the monitor") {
+    // the all-"{}" batch merges to a zero-row store; the next batch must
+    // read that as "no batch merged", not as a NULL batch id
+    val root = tmp()
+    var alerts = Vector.empty[Seq[String]]
+    drive(root, Seq(Seq.fill(5)("{}"), clean ++ drifted), ks => alerts :+= ks)
+    assert(store(root) == batchFold(clean ++ drifted))
+    assert(alerts == Vector(Seq.empty, Seq("k")), s"got $alerts")
+  }
+
   test("replayed batch id refuses the merge but re-delivers the alert") {
     val root = tmp()
     var alerts = Vector.empty[Seq[String]]
